@@ -688,13 +688,15 @@ object Decontamination {
     // collision would add a false hit at ~|eval grams|·|train grams|
     // / 2⁶⁴ — the accepted signature-family bound.
     // No .distinct() on the build side (r20): a LeftSemi hit is
-    // membership, and the broadcast hash relation dedupes its keys at
-    // build time anyway — the explicit distinct planned a full exchange
-    // + two aggregates over the eval grams for rows the join treats
-    // identically. The train side stays exchange-free up to the
-    // hits-only (leak-sized) window shuffle: the broadcast semi-join IS
-    // the guide-§3.2 prefilter, with zero false positives, so a Bloom
-    // in front of it would only add an eval pass.
+    // membership, so duplicate eval grams cannot change the result, and
+    // the explicit distinct planned a full exchange + two aggregates over
+    // the eval grams. The cost moves to the broadcast: the driver collects
+    // EVERY eval-gram row and the hash relation keeps each duplicate, so
+    // its size scales with total eval-gram occurrences, not distinct
+    // grams; repetitive eval text inflates it. The train side stays
+    // exchange-free up to the hits-only (leak-sized) window shuffle: the
+    // broadcast semi-join IS the guide-§3.2 prefilter, with zero false
+    // positives, so a Bloom in front of it would only add an eval pass.
     val eg = grams(evalDocs).select(xxhash64(col("s")).as("h"))
     val hits = grams(train)
       .select(col("doc_id"), col("i"), xxhash64(col("s")).as("h"))

@@ -125,7 +125,7 @@ object Multimodal {
     * Audio stays on its source partitioning: javax.sound contends so
     * hard that even 4 concurrent tasks lose to one (1.31 -> 2.43 s).
     */
-  private def spreadImages(ids: DataFrame): DataFrame = {
+  private[graft] def spreadImages(ids: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical._
     val par = math.min(8, ids.sparkSession.sparkContext.defaultParallelism)
     // Partition-count probe via toRdd is only safe on a plan that can
@@ -134,9 +134,11 @@ object Multimodal {
     // (ADVICE r19). Every current caller passes a narrow id scan; if a
     // shuffled frame ever arrives, skip the probe and spread
     // unconditionally — one par-bounded exchange, no eager execution.
+    // (`Dataset.distinct`/`dropDuplicates` analyze to Deduplicate, SQL
+    // DISTINCT to Distinct; INTERSECT/EXCEPT are SetOperations)
     val mayShuffle = ids.queryExecution.analyzed.exists {
       case _: Join | _: Aggregate | _: Sort | _: Window | _: Distinct => true
-      case _: RepartitionOperation => true
+      case _: Deduplicate | _: SetOperation | _: RepartitionOperation => true
       case _ => false
     }
     if (mayShuffle) ids.repartition(par)

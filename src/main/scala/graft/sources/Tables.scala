@@ -1,7 +1,10 @@
 package graft.sources
 
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -23,25 +26,43 @@ object Tables {
     * with the schema supplied (round 19). Data is still read from
     * parquet on every action; nothing row-shaped is ever cached here.
     *
-    * The memo key carries the file's (mtime, length) fingerprint
-    * (ADVICE r19): a path regenerated with a different schema in the
-    * same JVM (fixture rebuild, testdata refresh) re-infers instead of
-    * silently serving the stale StructType. The stat is a local
-    * filesystem call, microseconds against the 95 ms it replaces; a
-    * multi-file parquet DIRECTORY fingerprints as the directory's own
-    * (mtime, length), which any rewrite bumps.
+    * Each path holds ONE entry, (fingerprint, schema), checked on every
+    * load: a path regenerated with a different schema in the same JVM
+    * (fixture rebuild, testdata refresh) re-infers and replaces its entry
+    * instead of serving the stale StructType or adding another. A file
+    * fingerprints as its (mtime, length); a multi-file parquet DIRECTORY
+    * as its own (mtime, length) plus its newest child's (name, mtime,
+    * length), because a part file overwritten in place under the same
+    * name changes neither the directory's mtime nor its length. The
+    * stats are local filesystem calls, microseconds against the 95 ms
+    * they replace.
     */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), org.apache.spark.sql.types.StructType]()
+  private type Fingerprint = ((Long, Long), Option[(String, Long, Long)])
+  private[graft] val schemaCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (Option[Fingerprint], StructType)]()
+
+  /** (mtime, length) of `path`, and for a directory its newest child's
+    * (name, mtime, length); None when it cannot be read locally (such a
+    * path keeps its first schema).
+    */
+  private def fingerprint(path: String): Option[Fingerprint] = try {
+    def stat(f: Path) = (Files.getLastModifiedTime(f).toMillis, Files.size(f))
+    val p = Paths.get(path)
+    val newest = if (!Files.isDirectory(p)) None else {
+      val ls = Files.list(p)
+      try ls.iterator().asScala.map { f => val (m, n) = stat(f); (f.getFileName.toString, m, n) }
+        .maxByOption { case (name, m, _) => (m, name) }
+      finally ls.close()
+    }
+    Some((stat(p), newest))
+  } catch { case scala.util.control.NonFatal(_) => None }
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val key = try {
-      val p = java.nio.file.Paths.get(path)
-      (path, java.nio.file.Files.getLastModifiedTime(p).toMillis,
-        java.nio.file.Files.size(p))
-    } catch { case _: Exception => (path, -1L, -1L) }
-    val sch = schemaCache.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
+    val fp = fingerprint(path)
+    val sch = schemaCache.compute(path, (_, old) =>
+      if (old != null && old._1 == fp) old
+      else (fp, spark.read.parquet(path).schema))._2
     spark.read.schema(sch).parquet(path)
   }
 

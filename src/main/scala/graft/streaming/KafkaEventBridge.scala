@@ -8,17 +8,16 @@ import graft.model.Event
   * reference uses (`client_request`/`internal`/`client_reply` topics,
   * /root/reference/stateflow/client/kafka_client.py:165-206).
   *
-  * This container has no broker and no kafka connector jar, so these
-  * builders are compile-checked shape only (NOT exercised by tests —
-  * the MemoryStream loopback in [[StreamingEntityRuntime]] plays the
-  * same topology role locally). On a real cluster:
+  * The build has no broker and no kafka connector jar, so these
+  * builders are compile-checked shape only (NOT exercised by tests).
+  * [[StreamingEntityRuntime]] drains continuations inside the batch, so
+  * it needs no "internal" topic; its durable file ingress plays the
+  * replayable `client_request` role locally. On a real cluster:
   *
   * {{{
-  * val events = KafkaEventBridge.reader(spark, "broker:9092",
-  *   "client_request,internal")
-  * // -> deserialize -> groupByKey -> flatMapGroupsWithState(handle)
+  * val events = KafkaEventBridge.reader(spark, "broker:9092", "client_request")
+  * // -> foreachBatch drain rounds over the entity state (handle)
   * // -> KafkaEventBridge.writer(replies, "broker:9092", "client_reply")
-  * //    and continuations back to "internal"
   * }}}
   */
 object KafkaEventBridge {

@@ -1,21 +1,24 @@
 package graft
 
-import graft.model.TestEntities
+import java.nio.file.{Files, Path}
+import graft.flow.FlowRegistry
+import graft.model.{EntityRef, Event, EventType, Payload, TestEntities}
 import graft.runtime.Client
-import graft.streaming.StreamingEntityRuntime
+import graft.runtime.local.LocalRuntime
+import graft.streaming.{EventBinary, StreamingEntityRuntime}
 
 /** Durability gate: entity state survives a full runtime restart when
   * the sources are replayable (file ingress) and the checkpoint dir is
   * stable — the property the reference gets from Kafka offsets +
-  * runtime state backends, here from Spark's checkpointed state store.
-  * MemoryStream cannot provide this (its data dies with the query), so
-  * this spec runs the file-ingress mode; production swaps in Kafka with
-  * the same topology.
+  * runtime state backends, here from the streaming checkpoint plus the
+  * runtime's per-batch state changelog. MemoryStream cannot provide this
+  * (its data dies with the query), so this spec runs the file-ingress
+  * mode; production swaps in Kafka with the same topology.
   */
 class CheckpointRecoverySpec extends SparkSpec {
 
   test("entity state survives a runtime restart from the checkpoint") {
-    val base = java.nio.file.Files.createTempDirectory("graft-recovery")
+    val base = Files.createTempDirectory("graft-recovery")
     val ckpt = base.resolve("ckpt").toString
     val in = base.resolve("in").toString
 
@@ -29,8 +32,8 @@ class CheckpointRecoverySpec extends SparkSpec {
     rt1.close()
 
     // life 2: a NEW runtime over the same checkpoint + ingress dirs
-    // resumes the state store — the balance written before the restart
-    // must be visible, and further mutations must build on it
+    // resumes the state — the balance written before the restart must
+    // be visible, and further mutations must build on it
     val rt2 = new StreamingEntityRuntime(TestEntities.registry, spark,
       checkpointDir = Some(ckpt), fileInputDir = Some(in))
     try {
@@ -41,5 +44,140 @@ class CheckpointRecoverySpec extends SparkSpec {
       // duplicate create must still fail: key existence is state too
       assert(c2.create("User", Map("username" -> "phoenix")).isLeft)
     } finally rt2.close()
+  }
+
+  // ---- the restart gate for flows: ycsb-t transfers across a restart ----
+
+  private val Entity = "YCSBEntity"
+  private val Keys = 50
+  private val Start = 100
+
+  private def key(i: Int) = s"k$i"
+
+  /** 200 seeded transfers of 1 between distinct keys. */
+  private def transfers(tag: String): Seq[Event] = {
+    TestEntities.registerFlows()
+    val rnd = new scala.util.Random(7)
+    (0 until 200).map { i =>
+      val a = rnd.nextInt(Keys)
+      val b = (a + 1 + rnd.nextInt(Keys - 1)) % Keys
+      Event(s"$tag-t$i", Entity, key(a), EventType.EventFlow, Payload.FlowPayload(
+        FlowRegistry.instantiate(s"$Entity.transfer", EntityRef(Entity, key(a)),
+          Map("transfer_amount" -> 1, "other_entity" -> EntityRef(Entity, key(b))))))
+    }
+  }
+
+  /** Balances after the ops on a LocalRuntime, the serial oracle. */
+  private def oracle(ops: Seq[Event]): Map[String, Any] = {
+    val rt = new LocalRuntime(TestEntities.registry)
+    (0 until Keys).foreach(i => rt.send(create(i, "o")))
+    ops.foreach(rt.send)
+    (0 until Keys).map(i => key(i) -> rt.store((Entity, key(i)))("value")).toMap
+  }
+
+  private def create(i: Int, tag: String) = Event(s"$tag-c$i", Entity, key(i), EventType.InitClass,
+    Payload.CreateArgs(Map("key" -> key(i), "value" -> Start)))
+
+  private def balances(rt: StreamingEntityRuntime): Map[String, Any] = {
+    val reads = (0 until Keys).map(i =>
+      Event(s"read-$i", Entity, key(i), EventType.GetState, Payload.AttrGet("value")))
+    rt.sendAsync(reads)
+    rt.drain()
+    reads.map { r =>
+      r.key -> (rt.takeReply(r.eventId) match {
+        case Some(Event(_, _, _, EventType.SuccessfulStateRequest, Payload.Result(v))) => v
+        case other => s"no value: $other"
+      })
+    }.toMap
+  }
+
+  /** Write events into the ingress dir while no runtime runs, the way a
+    * producer keeps appending to the topic.
+    */
+  private def produce(in: Path, name: String, evs: Seq[Event]): Unit = {
+    val staged = in.resolve("." + name)
+    Files.write(staged, evs.map(EventBinary.encode).mkString("", "\n", "\n").getBytes("UTF-8"))
+    Files.move(staged, in.resolve(name), java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
+  }
+
+  /** Life 1 takes the first 100 transfers, sent in groups of 10 without
+    * waiting, and is closed with them in flight; 50 more land in the
+    * ingress while no runtime runs; life 2, on the same dirs, takes the
+    * last 50. `betweenLives` runs on the dirs after life 1 stops.
+    * Returns the ops, each op's replies over both lives, and the final
+    * balances.
+    */
+  private def twoLives(tag: String)(betweenLives: (Path, Path) => Unit)
+      : (Seq[Event], Map[String, Seq[Event]], Map[String, Any]) = {
+    val base = Files.createTempDirectory(s"graft-restart-$tag")
+    val (ckpt, in) = (base.resolve("ckpt"), base.resolve("in"))
+    def life() = new StreamingEntityRuntime(TestEntities.registry, spark,
+      checkpointDir = Some(ckpt.toString), fileInputDir = Some(in.toString))
+    val ops = transfers(tag)
+    val rt1 = life()
+    val creates = (0 until Keys).map(create(_, tag))
+    rt1.sendAsync(creates)
+    rt1.drain()
+    assert(creates.forall(e => rt1.takeReply(e.eventId).exists(_.eventType == EventType.SuccessfulCreateClass)))
+    ops.take(100).grouped(10).foreach(rt1.sendAsync)
+    rt1.close()
+    def taken(rt: StreamingEntityRuntime) =
+      ops.flatMap(o => rt.takeReply(o.eventId).map(o.eventId -> _))
+    val first = taken(rt1)
+    betweenLives(ckpt, in)
+    produce(in, "offline-0.txt", ops.slice(100, 150))
+    val rt2 = life()
+    try {
+      ops.drop(150).grouped(10).foreach(rt2.sendAsync)
+      rt2.drain()
+      val replies = (first ++ taken(rt2)).groupMap(_._1)(_._2)
+      (ops, replies, balances(rt2))
+    } finally rt2.close()
+  }
+
+  private def assertConsistent(ops: Seq[Event], got: Map[String, Any]): Unit = {
+    val vals = got.values.collect { case v: Int => v.toLong }
+    assert(vals.size === Keys, s"unreadable balances: $got")
+    assert(vals.sum === Start.toLong * Keys, "funds must be conserved")
+    assert(vals.forall(_ >= 0), "no negative balance")
+    // conservation alone cannot see a transfer applied twice
+    assert(got === oracle(ops), "each transfer must be applied exactly once")
+  }
+
+  private def transferOk(r: Event): Boolean =
+    r.eventType == EventType.SuccessfulInvocation && r.payload == Payload.Result(true)
+
+  test("restart gate: transfers across a close/restart, funds conserved, one reply per op") {
+    val (ops, replies, got) = twoLives("a")((_, _) => ())
+    ops.foreach { o =>
+      val rs = replies.getOrElse(o.eventId, Nil)
+      assert(rs.size === 1, s"${o.eventId} answered ${rs.size} times")
+      assert(transferOk(rs.head), s"${o.eventId}: ${rs.head}")
+    }
+    assertConsistent(ops, got)
+  }
+
+  test("restart gate: a batch replayed after its lost commit is applied once") {
+    var replayed = -1L
+    val (ops, replies, got) = twoLives("b") { (ckpt, _) =>
+      // a crash after the batch's changelog write, before its commit:
+      // drop the newest commit entry, so the next life replays it
+      val commits = ckpt.resolve("commits")
+      replayed = commits.toFile.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+      assert(Files.exists(ckpt.resolveSibling("ckpt-state").resolve(f"delta-$replayed%012d")),
+        "the dropped batch must have written its changelog delta")
+      Files.delete(commits.resolve(replayed.toString))
+      Files.deleteIfExists(commits.resolve(s".$replayed.crc")): Unit
+    }
+    assert(replayed >= 0)
+    // across a crash replies are at-least-once: the replayed batch
+    // answers its ops again, with the same values
+    ops.foreach { o =>
+      val rs = replies.getOrElse(o.eventId, Nil)
+      assert(rs.nonEmpty, s"${o.eventId} unanswered")
+      assert(rs.forall(transferOk), s"${o.eventId}: $rs")
+    }
+    assert(replies.values.exists(_.size == 2), "the dropped batch must have been replayed")
+    assertConsistent(ops, got)
   }
 }

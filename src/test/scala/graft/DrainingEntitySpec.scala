@@ -1,162 +1,150 @@
 package graft
 
-import graft.model.TestEntities
-import graft.runtime.EventTransport
-import graft.streaming.DrainingEntityRuntime
+import graft.model.{Event, EventType, Payload, TestEntities}
+import graft.runtime.{Client, EventTransport}
+import graft.streaming.StreamingEntityRuntime
 
-/** The S1-S11 scenario gate on the DRAINING lowering (state managed in
-  * foreachBatch, continuations re-dispatched in-batch), plus the
-  * property the lowering exists for: a multi-hop flow completes in ONE
-  * micro-batch instead of one per hop.
+/** The S1-S11 scenario gate on the DURABLE configuration of the draining
+  * lowering (client events through the file ingress, streaming checkpoint
+  * plus a per-batch state changelog), plus the properties draining exists
+  * for: a multi-hop flow completes in ONE micro-batch, a round cap spills
+  * to the next batch, and state survives restarts and compaction through
+  * the changelog. [[StreamingEntitySpec]] runs the same gate in memory.
   */
 class DrainingEntitySpec extends EntityScenarios with SparkSpec {
 
-  private var open: List[DrainingEntityRuntime] = Nil
+  private var open: List[StreamingEntityRuntime] = Nil
 
-  override def freshTransport(): EventTransport = {
-    val rt = new DrainingEntityRuntime(TestEntities.registry, spark)
-    open ::= rt
-    rt
-  }
+  private def track(rt: StreamingEntityRuntime): StreamingEntityRuntime = { open ::= rt; rt }
+
+  override def freshTransport(): EventTransport =
+    durable(java.nio.file.Files.createTempDirectory("graft-drain"))
 
   override def withFixture(test: NoArgTest) = {
     try super.withFixture(test)
     finally { open.foreach(_.close()); open = Nil }
   }
 
+  /** A durable runtime over fresh (or the given) checkpoint + ingress dirs. */
+  private def durable(base: java.nio.file.Path): StreamingEntityRuntime =
+    track(new StreamingEntityRuntime(TestEntities.registry, spark,
+      checkpointDir = Some(base.resolve("ckpt").toString),
+      fileInputDir = Some(base.resolve("in").toString)))
+
+  private def changelogEntries(base: java.nio.file.Path): Seq[String] =
+    Option(base.resolve("ckpt-state").toFile.list()).getOrElse(Array.empty[String])
+      .filter(n => n.startsWith("delta-") || n.startsWith("snap-")).toSeq.sorted
+
+  private def restart(rt: StreamingEntityRuntime, base: java.nio.file.Path): StreamingEntityRuntime = {
+    rt.close()
+    open = open.filterNot(_ eq rt)
+    durable(base)
+  }
+
   test("a two-entity split flow completes in ONE micro-batch") {
     val (rtT, c) = fresh()
-    val rt = rtT.asInstanceOf[DrainingEntityRuntime]
+    val rt = rtT.asInstanceOf[StreamingEntityRuntime]
     val Right(u) = c.create("User", Map("username" -> "drainer"))
     val Right(it) = c.create("Item", Map("item_name" -> "drain-item", "price" -> 5))
     c.call(u, "update_balance", Map("x" -> 20))
     c.call(it, "update_stock", Map("amount" -> 4))
     val batchesBefore = rt.busyBatches.size
-    val hopsBefore = rt.drainedHopCount
+    val hopsBefore = rt.loopbackWrittenCount
+    val repliesBefore = rt.driverCollectedCount
     assert(c.call(u, "buy_item", Map("amount" -> 3, "item" -> it)) === true)
     // the flow's inter-entity hops drained inside the batch...
-    assert(rt.drainedHopCount > hopsBefore,
-      "buy_item hops must drain in-batch")
+    assert(rt.loopbackWrittenCount > hopsBefore, "buy_item hops must drain in-batch")
     // ...so exactly one non-empty micro-batch carried the whole flow
-    // (the loopback lowering needs one batch PER hop here)
     assert(rt.busyBatches.size - batchesBefore === 1,
       s"flow should complete in one batch, saw ${rt.busyBatches.size - batchesBefore}")
-    assert(rt.maxDrainRoundsSeen >= 2, "a split flow needs >= 2 drain rounds")
-    // and state is consistent afterwards
+    // and exactly one client-facing reply crossed to the driver
+    assert(rt.driverCollectedCount - repliesBefore === 1L)
     assert(c.getAttr(u, "balance") === 5)
     assert(c.getAttr(it, "stock") === 1)
   }
 
   test("round cap: events past maxDrainRounds spill to the next batch, flow still completes") {
     // cap 1: round 0 processes the client event, its first continuation
-    // must spill and complete in a later batch — liveness under a cap
-    // tighter than the flow's depth
-    val rt = new DrainingEntityRuntime(TestEntities.registry, spark, maxDrainRounds = 1)
-    open ::= rt
-    val c = new graft.runtime.Client(TestEntities.registry, rt)
+    // must spill and complete in a later batch
+    val rt = track(new StreamingEntityRuntime(TestEntities.registry, spark, maxDrainRounds = 1))
+    val c = new Client(TestEntities.registry, rt)
     val Right(u) = c.create("User", Map("username" -> "capped"))
     val Right(it) = c.create("Item", Map("item_name" -> "cap-item", "price" -> 5))
     c.call(u, "update_balance", Map("x" -> 20))
     c.call(it, "update_stock", Map("amount" -> 4))
+    val batchesBefore = rt.busyBatches.size
     assert(c.call(u, "buy_item", Map("amount" -> 3, "item" -> it)) === true)
+    assert(rt.busyBatches.size - batchesBefore > 1, "a capped flow must span batches")
     assert(c.getAttr(u, "balance") === 5)
     assert(c.getAttr(it, "stock") === 1)
   }
 
   test("durable stateDir: a restarted runtime replays the changelog, tombstones included") {
-    import graft.model.{Event, EventType, Payload}
-    val dir = java.nio.file.Files.createTempDirectory("drain-state").toString
-    val rt1 = new DrainingEntityRuntime(TestEntities.registry, spark,
-      stateDir = Some(dir))
-    val c1 = new graft.runtime.Client(TestEntities.registry, rt1)
+    val dir = java.nio.file.Files.createTempDirectory("graft-durable")
+    val rt1 = durable(dir)
+    val c1 = new Client(TestEntities.registry, rt1)
     val Right(u) = c1.create("User", Map("username" -> "durable"))
     c1.call(u, "update_balance", Map("x" -> 37))
     val Right(gone) = c1.create("User", Map("username" -> "deleted-one"))
     assert(rt1.send(Event("d1", gone.entity, gone.key,
-      EventType.DeleteState, Payload.Empty)).eventType ===
-      EventType.SuccessfulStateRequest)
-    rt1.close()
-    // cold restart on the same changelog dir
-    val rt2 = new DrainingEntityRuntime(TestEntities.registry, spark,
-      stateDir = Some(dir))
-    open ::= rt2
-    val c2 = new graft.runtime.Client(TestEntities.registry, rt2)
+      EventType.DeleteState, Payload.Empty)).eventType === EventType.SuccessfulStateRequest)
+    // cold restart on the same dirs
+    val rt2 = restart(rt1, dir)
+    val c2 = new Client(TestEntities.registry, rt2)
     assert(c2.getAttr(u, "balance") === 37, "committed state must survive restart")
-    // the delete's tombstone replays too — latest row per key wins
+    // the delete's tombstone replays too: the newest row per key wins
     assert(rt2.send(Event("g1", gone.entity, gone.key,
-      EventType.GetState, Payload.AttrGet("username"))).eventType ===
-      EventType.KeyNotFound)
-    // and the restored store keeps accepting writes + durable flows
+      EventType.GetState, Payload.AttrGet("username"))).eventType === EventType.KeyNotFound)
     c2.call(u, "update_balance", Map("x" -> -7))
     assert(c2.getAttr(u, "balance") === 30)
-    // changelog compaction: many deltas fold into ONE live-rows file;
+    // compaction folds the deltas into ONE snapshot of the live rows;
     // a third cold restart restores the identical state from it
-    rt2.advance()
     rt2.compactChangelog()
-    val files = new java.io.File(dir).list()
-      .filter(n => n.startsWith("delta-") && n.endsWith(".parquet"))
-    assert(files.length === 1, s"compaction must leave one delta, got ${files.toSeq}")
-    rt2.close()
-    open = open.filterNot(_ eq rt2)
-    val rt3 = new DrainingEntityRuntime(TestEntities.registry, spark,
-      stateDir = Some(dir))
-    open ::= rt3
-    val c3 = new graft.runtime.Client(TestEntities.registry, rt3)
+    assert(changelogEntries(dir).size === 1, s"compaction must leave one entry: ${changelogEntries(dir)}")
+    assert(changelogEntries(dir).head.startsWith("snap-"))
+    val rt3 = restart(rt2, dir)
+    val c3 = new Client(TestEntities.registry, rt3)
     assert(c3.getAttr(u, "balance") === 30, "compacted changelog must restore")
     assert(rt3.send(Event("g2", gone.entity, gone.key,
-      EventType.GetState, Payload.AttrGet("username"))).eventType ===
-      EventType.KeyNotFound, "compaction must not resurrect deleted keys")
+      EventType.GetState, Payload.AttrGet("username"))).eventType === EventType.KeyNotFound,
+      "compaction must not resurrect deleted keys")
   }
 
   test("restart then IMMEDIATE compaction: store survives without a prior probe") {
-    // the latent-lineage path: restore()'s partitionBy shuffle only
-    // materializes on first probe, so a cold restart followed directly
-    // by compactChangelog() used to leave `base` reading delta files
-    // the compaction had just deleted -> FileNotFoundException on the
-    // next state access. The fix re-points the store at the folded
-    // delta before the old files go.
-    val dir = java.nio.file.Files.createTempDirectory("drain-compact-cold").toString
-    val rt1 = new DrainingEntityRuntime(TestEntities.registry, spark,
-      stateDir = Some(dir))
-    val c1 = new graft.runtime.Client(TestEntities.registry, rt1)
+    // the restored store reads the changelog lazily; compacting before
+    // any probe must not leave it reading the entries it deleted
+    val dir = java.nio.file.Files.createTempDirectory("graft-compact-cold")
+    val rt1 = durable(dir)
+    val c1 = new Client(TestEntities.registry, rt1)
     val Right(u) = c1.create("User", Map("username" -> "cold-compact"))
     c1.call(u, "update_balance", Map("x" -> 12))
-    rt1.close()
-    val rt2 = new DrainingEntityRuntime(TestEntities.registry, spark,
-      stateDir = Some(dir))
-    open ::= rt2
+    val rt2 = restart(rt1, dir)
     rt2.compactChangelog() // NO probe between restart and compaction
-    val files = new java.io.File(dir).list()
-      .filter(n => n.startsWith("delta-") && n.endsWith(".parquet"))
-    assert(files.length === 1)
-    val c2 = new graft.runtime.Client(TestEntities.registry, rt2)
+    assert(changelogEntries(dir).size === 1)
+    val c2 = new Client(TestEntities.registry, rt2)
     assert(c2.getAttr(u, "balance") === 12,
-      "state access after restart+compact must not read deleted deltas")
+      "state access after restart+compact must not read deleted entries")
     c2.call(u, "update_balance", Map("x" -> 3))
     assert(c2.getAttr(u, "balance") === 15)
   }
 
   test("read-only traffic appends no changelog deltas") {
-    val dir = java.nio.file.Files.createTempDirectory("drain-readonly").toString
-    val rt = new DrainingEntityRuntime(TestEntities.registry, spark,
-      stateDir = Some(dir))
-    open ::= rt
-    val c = new graft.runtime.Client(TestEntities.registry, rt)
+    val dir = java.nio.file.Files.createTempDirectory("graft-readonly")
+    val rt = durable(dir)
+    val c = new Client(TestEntities.registry, rt)
     val Right(u) = c.create("User", Map("username" -> "reader"))
     c.call(u, "update_balance", Map("x" -> 9))
-    def deltas() = new java.io.File(dir).list()
-      .count(n => n.startsWith("delta-") && n.endsWith(".parquet"))
-    val before = deltas()
+    val before = changelogEntries(dir)
     (1 to 5).foreach { _ => assert(c.getAttr(u, "balance") === 9) }
-    assert(deltas() === before,
+    assert(changelogEntries(dir) === before,
       "GetState-only batches must not grow the durable changelog")
   }
 
   test("state survives batches, deletes tombstone, compaction preserves both") {
     val (rtT, c) = fresh()
-    val rt = rtT.asInstanceOf[DrainingEntityRuntime]
-    // compactEvery default is 16; run enough batches to cross it
-    val refs = (0 until 20).map { i =>
+    val rt = rtT.asInstanceOf[StreamingEntityRuntime]
+    // enough merging batches to cross a lineage cut (every CompactEvery)
+    val refs = (0 until StreamingEntityRuntime.CompactEvery + 4).map { i =>
       val Right(r) = c.create("User", Map("username" -> s"u$i"))
       c.call(r, "update_balance", Map("x" -> i)): Unit
       r
@@ -165,12 +153,9 @@ class DrainingEntitySpec extends EntityScenarios with SparkSpec {
       assert(c.getAttr(r, "balance") === i, s"state for u$i lost across batches")
     }
     // delete u0; a later read must see KeyNotFound, not a stale row
-    import graft.model.{Event, EventType, Payload}
-    val del = Event("del-u0", refs.head.entity, refs.head.key,
-      EventType.DeleteState, Payload.Empty)
+    val del = Event("del-u0", refs.head.entity, refs.head.key, EventType.DeleteState, Payload.Empty)
     assert(rtT.send(del).eventType === EventType.SuccessfulStateRequest)
-    val get = Event("get-u0", refs.head.entity, refs.head.key,
-      EventType.GetState, Payload.AttrGet("balance"))
+    val get = Event("get-u0", refs.head.entity, refs.head.key, EventType.GetState, Payload.AttrGet("balance"))
     assert(rtT.send(get).eventType === EventType.KeyNotFound)
     // re-create with the same args (same derived key) succeeds only if
     // the tombstone really removed the row

@@ -525,4 +525,40 @@ class MultimodalSpec extends SparkSpec {
     assert(math.abs(pairs((0L, 50L)) - 7.0 / 9.0) < 1e-3)
     assert(math.abs(pairs((0L, 100L)) - 0.6) < 1e-3)
   }
+
+  test("spreadImages: a shuffling input repartitions without the eager toRdd probe job") {
+    import org.apache.spark.sql.catalyst.plans.logical.Repartition
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    // not unique and multi-partition, so the dedup needs an exchange
+    def ids = spark.range(0, 64, 1, 4).select((col("id") % 7).as("doc_id"))
+    val shuffling = Seq("distinct" -> ids.distinct(), "intersect" -> ids.intersect(ids.filter(col("doc_id") > 3)))
+    val par = math.min(8, spark.sparkContext.defaultParallelism)
+    Thread.sleep(500) // let in-flight listener events of earlier tests drain
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // control: probing a shuffling plan's partitions under AQE runs its stages
+      ids.distinct().queryExecution.toRdd.getNumPartitions: Unit
+      Thread.sleep(500)
+      assert(jobs.get() > 0, "toRdd on a distinct plan should run a job under AQE")
+      shuffling.foreach { case (name, df) =>
+        jobs.set(0)
+        val spread = Multimodal.spreadImages(df)
+        Thread.sleep(500)
+        assert(jobs.get() === 0, s"$name: spreadImages ran ${jobs.get()} jobs")
+        assert(spread.queryExecution.analyzed match {
+          case Repartition(n, true, _) => n == par
+          case _ => false
+        }, s"$name: expected the repartition branch")
+      }
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
+  }
 }

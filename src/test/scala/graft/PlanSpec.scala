@@ -1337,6 +1337,10 @@ class PlanSpec extends SparkSpec {
       }
       assert(offenders.isEmpty,
         s"Coalesce(1) reaches a file scan narrowly in: ${offenders.mkString(", ")}")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    } finally {
+      // query construction persists frames (ANN corpora); free them
+      spark.catalog.clearCache()
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
   }
 }

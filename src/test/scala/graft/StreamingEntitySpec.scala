@@ -4,11 +4,10 @@ import graft.model.TestEntities
 import graft.runtime.EventTransport
 import graft.streaming.StreamingEntityRuntime
 
-/** The same S1-S6 scenario gate, but end-to-end through Structured
-  * Streaming: MemoryStream -> groupByKey -> flatMapGroupsWithState ->
-  * foreachBatch egress with loopback continuation re-injection. A
-  * multi-hop flow (buy_item, state_requests, ...) really crosses
-  * micro-batches here.
+/** The S1-S11 scenario gate end-to-end through Structured Streaming
+  * (MemoryStream -> foreachBatch drain rounds over the partitioned state
+  * RDD). The draining and changelog properties, and the same gate over
+  * the durable configuration, are in [[DrainingEntitySpec]].
   */
 class StreamingEntitySpec extends EntityScenarios with SparkSpec {
 
@@ -23,50 +22,5 @@ class StreamingEntitySpec extends EntityScenarios with SparkSpec {
   override def withFixture(test: NoArgTest) = {
     try super.withFixture(test)
     finally { open.foreach(_.close()); open = Nil }
-  }
-
-  test("loopback publish is idempotent per (batch, partition) — replay adds nothing") {
-    import graft.model.{Event, EventType, Payload}
-    import graft.streaming.EventBinary
-    val stage = java.nio.file.Files.createTempDirectory("graft-lb-stage").toString
-    val topic = java.nio.file.Files.createTempDirectory("graft-lb-topic").toString
-    val acc = spark.sparkContext.longAccumulator("lb-test")
-    val hop = Event("hop1", "T", "k", EventType.Ping, Payload.Empty)
-    val reply = Event("r1", "T", "k", EventType.SuccessfulInvocation, Payload.Empty)
-    val evs = Seq(hop, reply)
-    val r1 = StreamingEntityRuntime.egressPartition(evs.iterator, stage, topic, acc, 3L)
-    assert(r1.toSeq === Seq(reply), "replies are returned, not written to loopback")
-    // simulated batch replay / task retry: same (batchId, partition)
-    val r2 = StreamingEntityRuntime.egressPartition(evs.iterator, stage, topic, acc, 3L)
-    assert(r2.toSeq === Seq(reply), "replay still surfaces the replies")
-    val files = new java.io.File(topic).listFiles()
-    assert(files.length === 1, "replay must republish, not append a duplicate")
-    assert(files.head.getName === "b3-p0.txt")
-    val lines = java.nio.file.Files.readAllLines(files.head.toPath)
-    assert(lines.size === 1, "only the hop goes to the loopback, exactly once")
-    assert(EventBinary.decode(lines.get(0)) === hop)
-    // a different batch publishes its own file
-    StreamingEntityRuntime.egressPartition(evs.iterator, stage, topic, acc, 4L): Unit
-    assert(new java.io.File(topic).listFiles().length === 2)
-    // nothing left behind in the stage dir
-    assert(new java.io.File(stage).listFiles().length === 0)
-  }
-
-  test("egress is distributed: hops use the loopback, driver sees replies only") {
-    val (rtT, c) = fresh()
-    val rt = rtT.asInstanceOf[StreamingEntityRuntime]
-    val Right(u) = c.create("User", Map("username" -> "hopper"))
-    val Right(it) = c.create("Item", Map("item_name" -> "hop-item", "price" -> 5))
-    c.call(u, "update_balance", Map("x" -> 20))
-    c.call(it, "update_stock", Map("amount" -> 4))
-    // buy_item is a two-entity split flow: its inter-entity hops MUST go
-    // through the distributed loopback sink, not the driver reply table
-    val repliesBefore = rt.driverCollectedCount
-    val hopsBefore = rt.loopbackWrittenCount
-    assert(c.call(u, "buy_item", Map("amount" -> 3, "item" -> it)) === true)
-    assert(rt.loopbackWrittenCount > hopsBefore,
-      "flow hops must traverse the loopback, not the driver")
-    // exactly one client-facing reply crossed the driver for the call
-    assert(rt.driverCollectedCount - repliesBefore === 1L)
   }
 }

@@ -11,7 +11,7 @@ import graft.flow.{FlowDef, FlowRegistry}
   * extends beyond the fixed S1-S6 scenarios: a sample of the random
   * property-test programs must produce identical results and entity
   * states on BOTH transports (each streaming run crosses real
-  * micro-batch + loopback machinery).
+  * micro-batch + drain-round machinery).
   */
 class StreamingParitySampleSpec extends SparkSpec with FlowProgramGen {
 
