@@ -1,64 +1,36 @@
 package graft.bench
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** Skew-stress soak: the hot-key CAPS of the banded-join family under
-  * a PLANTED Zipf(0.99) key distribution at x1/x10/x100 soak scale —
-  * the one scale behavior a 100-TB corpus will definitely exercise
-  * that neither the organic bench data (caps never fire, pinned by
-  * CappedFixtureSpec's engagement fixtures at sf0.1) nor the
-  * structure-preserving SCALE soaks (linear planted dup rate, no hot
-  * keys) ever measured.
+/** A planted Zipf(0.99) skew corpus for the hot-key caps of the
+  * banded-join family ([[graft.SkewStressSpec]]).
   *
-  * Fixture: every document draws a TEMPLATE by the Zipf(0.99)
-  * inverse-CDF (the YCSB mass shape, continuous approximation
+  * Every document draws a TEMPLATE by the Zipf(0.99) inverse-CDF (the
+  * YCSB mass shape, continuous approximation
   * r = (1 + u·(K^0.01 − 1))^100 over K = n/5 templates); same-template
-  * documents are byte-identical. Identical text is the worst-case
-  * hot key for every capped join at once: identical shingle sets →
-  * identical minhash signatures → one (band, band_hash) bucket per
-  * band holding the whole template; identical 4-gram sets → one
-  * doc-frequency key; identical simhash → one byte-band bucket;
-  * identical frame signatures → one video signature key. The head
-  * template holds ~n/H(K) ≈ 13% of the corpus — 65k documents in one
-  * bucket at x100, 2.1e9 candidate pairs if any cap fails to bound it.
-  *
-  * What each row PROVES (hard `require`s — the artifact only writes
-  * when every bound holds):
-  *   - ENGAGEMENT: over-cap templates exist at every scale (the head
-  *     template exceeds the cap from x1 up), and for the band indexes
-  *     that are publicly inspectable (dd2's minhash bands, the video
-  *     frame index) the pre-cap hottest bucket is measured and the
-  *     POST-CAP hottest bucket is ≤ cap — so per-bucket candidate
-  *     fan-out is ≤ cap² by construction.
-  *   - BOUND (behavioral, all four families): pairs touching any
-  *     over-cap template are EXACTLY ZERO — an over-cap identical
-  *     template floods every bucket it appears in past the cap, so
-  *     the cap must drop all of them; one surviving bucket would leak
-  *     ~C(65k, 2) pairs and the wall/row counts would explode.
-  *   - RECALL UNDER SKEW: sub-cap duplicate templates (2 ≤ m ≤ cap)
-  *     still pair exactly — planted-pair count Σ C(m,2) matches the
-  *     output exactly for the Jaccard families (identical docs verify
-  *     at J = 1.0) and is a lower bound for simhash (organic 64-bit
-  *     near-collisions may legitimately add pairs).
-  *   - WALL: sub-linear x1 → x10 → x100 (recorded as ratio_x100, read
-  *     against the 100x data factor like SCALE.json).
-  *
-  * Usage: `runMain graft.bench.SkewSoak [outPath]` (default
-  * SCALE_SKEW.json; artifact committed like SCALE.json).
-  * `SPARK_GRAFT_SCALE_RUNS` raises the per-scale min-of (default 2).
-  * Not part of the driver contract; evidence for the
-  * would-it-survive-100TB audit (r17 verdict ask #3).
+  * documents are byte-identical. Identical text is the worst-case hot
+  * key for every capped join at once: identical shingle sets →
+  * identical minhash signatures → one (band, band_hash) bucket per band
+  * holding the whole template; identical 4-gram sets → one
+  * doc-frequency key; identical simhash → one byte-band bucket. The
+  * head template holds ~n/H(K) ≈ 13% of the corpus.
   */
 object SkewSoak {
-  import ScaleSoak.mix
+
+  /** splitmix64 finalizer: a cheap, well-mixed deterministic hash. */
+  private def mix(x0: Long): Long = {
+    var x = x0 + 0x9e3779b97f4a7c15L
+    x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
+    x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
+    x ^ (x >>> 31)
+  }
 
   /** Zipf(0.99) template rank in [1, k] from a uniform hash of the doc
     * id — inverse of the continuous CDF F(r) = (r^(1-s) − 1)/(k^(1-s) − 1)
     * with s = 0.99 (the standard power-law inversion; YCSB's
     * scrambled-zipfian uses the same mass shape with rejection).
     */
-  private[graft] def zipfRank(id: Long, k: Long): Long = {
+  private def zipfRank(id: Long, k: Long): Long = {
     val u = Math.floorMod(mix(id * 1000003L + 7L), 1000000L) / 1000000.0
     val e = 0.01 // 1 - s
     val r = math.pow(1.0 + u * (math.pow(k.toDouble, e) - 1.0), 1.0 / e)
@@ -92,326 +64,5 @@ object SkewSoak {
         (id, t, templateText(t))
       }
       .toDF("doc_id", "template", "text")
-  }
-
-  /** Per-video frame-signature table for the video row: 8 signatures
-    * per document, derived from the TEMPLATE — same-template videos
-    * share all 8 frames (J = 1), and the head template's signatures
-    * carry its full document frequency.
-    */
-  private def synthSkewFrames(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-        explode(sequence(lit(0), lit(7))).as("j"),
-        col("template"))
-      .select(col("doc_id"),
-        concat(lit("f"), col("template"), lit("_"), col("j")).as("frame_md5"))
-
-  /** Template-derived PNG images (r19 soak extension): same-template
-    * documents carry byte-identical PNGs — identical dHash/pHash
-    * signatures, the worst-case hot key for the perceptual band joins.
-    * Pattern formula is [[graft.operators.Multimodal.syntheticPatternImages]]'s
-    * with the template as the pool key, so decode is REAL
-    * (javax.imageio), distributed, and deterministic.
-    */
-  private[graft] def synthSkewImages(docs: DataFrame)(
-      implicit spark: SparkSession): org.apache.spark.sql.Dataset[graft.operators.MediaRow] = {
-    import spark.implicits._
-    docs.select(col("doc_id"), col("template")).as[(Long, Long)]
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
-        rows.map { case (id, k) =>
-          val w = (16 + k % 5).toInt
-          val h = (12 + k % 4).toInt
-          val img = new java.awt.image.BufferedImage(
-            w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val r = ((k * 31 + x * x * 7 + y * y * 13 + x * y * 5) % 256).toInt
-              val g = ((k * 17 + x * x * 11 + y * y * 3 + x * y * 7) % 256).toInt
-              val b = ((k * 29 + x * x * 5 + y * y * 17 + x * y * 3) % 256).toInt
-              img.setRGB(x, y, (r << 16) | (g << 8) | b)
-              x += 1
-            }
-            y += 1
-          }
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", bos)
-          graft.operators.MediaRow(id, bos.toByteArray,
-            graft.operators.MediaMeta("image", "png", bos.size.toLong))
-        }
-      }
-  }
-
-  /** Template-derived WAV clips: same-template documents are
-    * byte-identical PCM (identical envelope signatures); REAL
-    * javax.sound decode on the operator side.
-    */
-  private[graft] def synthSkewAudio(docs: DataFrame)(
-      implicit spark: SparkSession): org.apache.spark.sql.Dataset[graft.operators.MediaRow] = {
-    import spark.implicits._
-    docs.select(col("doc_id"), col("template")).as[(Long, Long)]
-      .mapPartitions { rows =>
-        val fmt = new javax.sound.sampled.AudioFormat(
-          8000f, 16, 1, /*signed=*/ true, /*bigEndian=*/ false)
-        rows.map { case (id, k) =>
-          val n = (80 + k % 40).toInt
-          val pcm = new Array[Byte](n * 2)
-          var t = 0
-          while (t < n) {
-            val v = ((k * 131L + t.toLong * t * 7 + t * 13L) % 20001L - 10000L).toInt
-            pcm(2 * t) = (v & 0xff).toByte
-            pcm(2 * t + 1) = ((v >> 8) & 0xff).toByte
-            t += 1
-          }
-          val ais = new javax.sound.sampled.AudioInputStream(
-            new java.io.ByteArrayInputStream(pcm), fmt, n.toLong)
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.sound.sampled.AudioSystem.write(
-            ais, javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-          graft.operators.MediaRow(id, bos.toByteArray,
-            graft.operators.MediaMeta("audio", "wav", bos.size.toLong))
-        }
-      }
-  }
-
-  /** Template-derived 64-dim vectors: same-template documents carry
-    * identical embeddings (cosine exactly 1.0, identical sign-LSH
-    * signatures in any banding) — the embedding family's worst-case
-    * hot bucket. Components are uniform in [-1, 1] from the shared
-    * `mix`, so cross-template cosine concentrates near 0 (sigma ~
-    * 1/8 at dim 64) and a 0.9 threshold keeps organic pairs out of
-    * the exact-recall accounting.
-    */
-  private[graft] def synthSkewVecs(docs: DataFrame)(
-      implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id"), col("template")).as[(Long, Long)]
-      .map { case (id, t) =>
-        val v = Array.tabulate(64) { j =>
-          (Math.floorMod(mix(t * 10007L + j * 131L), 2000001L) - 1000000L) / 1e6
-        }
-        (id, v)
-      }
-      .toDF("vec_id", "embedding")
-  }
-
-  def main(args: Array[String]): Unit = {
-    val out = if (args.nonEmpty) args(0) else "SCALE_SKEW.json"
-    val cap = 50
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val base = java.nio.file.Files.createTempDirectory("graft-skew").toString
-    val scales = Seq("x1" -> 5000L, "x10" -> 50000L, "x100" -> 500000L)
-    scales.foreach { case (tag, n) =>
-      synthSkewDocs(spark, n).repartition(32)
-        .write.mode("overwrite").parquet(s"$base/$tag/docs.parquet")
-    }
-    def docs(tag: String) = spark.read.parquet(s"$base/$tag/docs.parquet")
-
-    // fixture facts per scale, from the materialized parquet: the
-    // over-cap ("hot") template set and the exact planted-pair count
-    // over sub-cap duplicate templates
-    case class Facts(hotTemplates: Long, headSize: Long, expectedPairs: Long)
-    val facts = scales.map { case (tag, _) =>
-      val byT = docs(tag).groupBy("template").agg(count(lit(1)).as("m"))
-      val r = byT.agg(
-        sum(when(col("m") > cap, 1L).otherwise(0L)).as("hot"),
-        max(col("m")).as("head"),
-        sum(when(col("m") <= cap, expr("(m * (m - 1)) div 2"))
-          .otherwise(0L)).as("exp")).head()
-      val f = Facts(r.getLong(0), r.getLong(1), r.getLong(2))
-      require(f.hotTemplates >= 1 && f.headSize > cap,
-        s"skew fixture must ENGAGE the cap at $tag: head=${f.headSize} cap=$cap")
-      tag -> f
-    }.toMap
-    facts.foreach { case (t, f) =>
-      println(s"[skew] $t hot_templates=${f.hotTemplates} " +
-        s"head=${f.headSize} expected_pairs=${f.expectedPairs}")
-    }
-
-    val nRuns = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_SCALE_RUNS", "2").toInt)
-    def timeIt(f: => Long): (Double, Long) = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      val rows = f
-      ((System.nanoTime() - t0) / 1e9, rows)
-    }
-
-    // RECALL MODE per family. "exact": the key space is large (2^32
-    // minhash band hashes, full n-gram / frame-signature strings), so a
-    // sub-cap template owns its buckets and planted recall must be
-    // EXACTLY Σ C(m,2) at every scale. "saturating": simhashPairs bands
-    // a 64-bit signature into 8-bit bands — 256 buckets per band TOTAL,
-    // so mean occupancy is n/256 regardless of templates, and beyond
-    // n ≈ 256·cap the cap (correctly) drops most buckets: the engine
-    // stays bounded while RECALL COLLAPSES — the saturation failure
-    // mode the dd5c wide-band knob exists for, here measured, not
-    // asserted away (recall_* fields in the artifact; exactness is
-    // asserted only at x1, which is below saturation by construction).
-    val ops: Seq[(String, String, String => DataFrame)] = Seq(
-      ("skew_dd2_minhash_lsh", "exact",
-        t => graft.operators.Dedup.minhashLsh(docs(t), maxBucket = cap)),
-      ("skew_dd3_ngram_jaccard", "exact",
-        t => graft.operators.Dedup.ngramJaccard(docs(t), maxDocFreq = cap)),
-      ("skew_dd4_simhash", "saturating",
-        t => graft.operators.Dedup.simhashPairs(docs(t), maxBucket = cap)),
-      // the r19 wide-signature knob (verdict #1): 256-bit signature,
-      // 32-bit bands — 4.3e9 buckets/band, so sub-cap template buckets
-      // stay uncontaminated at ×100 and recall is EXACT where the
-      // 64-bit row above measures 1.00/0.08/0.00. Same cap, same
-      // Hamming <= 7 pigeonhole (8 bands).
-      ("skew_dd4b_simhash_wide", "exact",
-        t => graft.operators.Dedup.simhashPairs(docs(t), maxBucket = cap,
-          nBits = 256)),
-      ("skew_video_frames", "exact",
-        t => graft.operators.Multimodal.videoFramePairs(
-          synthSkewFrames(docs(t)), maxDocFreq = cap)),
-      // ---- r19 extension (r18 verdict #7): the banded-Hamming media
-      // families and the embedding sign-LSH pair, same planted-Zipf
-      // template trick over REAL synthetic media (javax.imageio /
-      // javax.sound decode on the operator side) and hash-derived
-      // vectors. Probed at x1/x10 before the modes were wired:
-      //   emb 64×8   1.000 / 0.156  -> saturating (the banding-policy
-      //                                switch point, measured)
-      //   emb 128×32 1.000 / 1.000  -> exact (4.3e9 buckets/band)
-      //   dhash      1.048 / 0.656  -> saturating
-      //   audio      1.242 / 0.349  -> saturating
-      //   phash      0.941 at x1    -> presaturated: smooth synthetic
-      //     patterns concentrate DCT signatures, so its 256-bucket
-      //     byte bands saturate BELOW the x1 scale — no recall floor
-      //     is honest to require; the BOUND stays hard everywhere.
-      ("skew_emb_lsh", "saturating",
-        t => graft.operators.Similarity.lshNearDupPairs(
-            synthSkewVecs(docs(t))(spark), threshold = 0.9, maxBucket = cap)
-          .select(col("va").as("da"), col("vb").as("db"))),
-      ("skew_emb_lsh_wide", "exact",
-        t => graft.operators.Similarity.lshNearDupPairs(
-            synthSkewVecs(docs(t))(spark), threshold = 0.9, nBits = 128,
-            bandBits = 32, maxBucket = cap)
-          .select(col("va").as("da"), col("vb").as("db"))),
-      ("skew_mm_dhash", "saturating",
-        t => graft.operators.Multimodal.dhashPairs(
-          synthSkewImages(docs(t))(spark), maxBucket = cap)(spark)),
-      ("skew_mm_phash", "presaturated",
-        t => graft.operators.Multimodal.phashPairs(
-          synthSkewImages(docs(t))(spark), maxBucket = cap)(spark)),
-      ("skew_mm_audio", "saturating",
-        t => graft.operators.Multimodal.audioEnvelopePairs(
-          synthSkewAudio(docs(t))(spark), maxBucket = cap)(spark)))
-
-    val results = ops.map { case (name, mode, q) =>
-      q("x1").count(): Unit // JIT warmup on the small scale
-      val bySc = scales.map { case (tag, _) =>
-        val best = (1 to nRuns).map(_ => timeIt(q(tag).count())).minBy(_._1)
-        // BOUND: zero pairs may touch an over-cap template (da and db
-        // join back to the fixture's template column); RECALL: sub-cap
-        // planted dups all surface
-        val tpl = docs(tag).select(col("doc_id"), col("template"))
-        val hotT = docs(tag).groupBy("template")
-          .agg(count(lit(1)).as("m")).filter(col("m") > cap)
-          .select("template")
-        // persisted so the two bound counts don't re-run the operator
-        val pairs = q(tag)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val hotPairs = pairs
-          .join(tpl.withColumnRenamed("doc_id", "da"), "da")
-          .join(hotT, Seq("template"), "left_semi")
-          .count() +
-          pairs
-            .join(tpl.withColumnRenamed("doc_id", "db"), "db")
-            .join(hotT, Seq("template"), "left_semi")
-            .count()
-        pairs.unpersist(false)
-        require(hotPairs == 0L,
-          s"$name $tag: $hotPairs pairs touch an over-cap template — " +
-            "a hot bucket leaked through the cap")
-        val f = facts(tag)
-        if (mode == "exact")
-          require(best._2 == f.expectedPairs,
-            s"$name $tag: ${best._2} pairs != planted ${f.expectedPairs}")
-        else if (mode == "saturating" && tag == "x1")
-          // below band saturation (5000/256 ≈ 20 mean occupancy < cap)
-          // the planted dups must all surface; organic 64-bit
-          // near-collisions may add pairs on top. mode="presaturated"
-          // (phash on smooth synthetic patterns) has no recall floor
-          // anywhere — its bands saturate below x1, which the recall_*
-          // fields record; the BOUND require above stays hard.
-          require(best._2 >= f.expectedPairs,
-            s"$name $tag: ${best._2} pairs < planted ${f.expectedPairs} " +
-              "below saturation")
-        tag -> best
-      }
-      val (t1, _) = bySc.head._2
-      val line = bySc.map { case (tag, (t, r)) =>
-        val rec = r.toDouble / facts(tag).expectedPairs
-        f"$tag=${t}%.2fs ($r rows, recall ${rec}%.2f, ${t / t1}%.1fx)"
-      }.mkString("  ")
-      println(f"[skew] $name%-24s ($mode) $line")
-      (name, mode, bySc)
-    }
-
-    // the publicly inspectable band indexes: pre-cap hottest bucket vs
-    // post-cap hottest bucket at x100 — the <= cap (hence <= cap^2
-    // candidate fan-out) bound, measured not argued
-    val d100 = docs("x100")
-    val preMinhash = graft.operators.Dedup
-      .minhashBands(d100, maxBucket = Int.MaxValue)
-      .groupBy("band", "band_hash").agg(count(lit(1)).as("c"))
-      .agg(max("c")).head().getLong(0)
-    val postMinhash = graft.operators.Dedup
-      .minhashBands(d100, maxBucket = cap)
-      .groupBy("band", "band_hash").agg(count(lit(1)).as("c"))
-      .agg(max("c")).head().getLong(0)
-    require(preMinhash > cap && postMinhash <= cap,
-      s"minhash band cap bound violated: pre=$preMinhash post=$postMinhash cap=$cap")
-    val postVideo = graft.operators.Multimodal
-      .videoFrameIndex(synthSkewFrames(d100), frameBytes = 256,
-        targetFrames = 8, maxDocFreq = cap)
-      .groupBy("s").agg(count(lit(1)).as("c"))
-      .agg(max("c")).head().getLong(0)
-    require(postVideo <= cap,
-      s"video doc-freq cap bound violated: post=$postVideo cap=$cap")
-    println(s"[skew] x100 buckets: minhash pre=$preMinhash post=$postMinhash " +
-      s"video post=$postVideo cap=$cap")
-
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val items = results.map { case (name, mode, bySc) =>
-      val t1 = bySc.head._2._1
-      val fields = bySc.map { case (tag, (t, r)) =>
-        s""""t_${tag}_sec":${num(t)},"rows_$tag":$r,""" +
-          s""""recall_$tag":${num(r.toDouble / facts(tag).expectedPairs)},""" +
-          s""""ratio_$tag":${num(t / t1)}"""
-      }.mkString(",")
-      s"""  "$name": {"mode":"$mode",$fields}"""
-    }
-    val worst100 = results.map { case (_, _, bySc) =>
-      bySc.last._2._1 / bySc.head._2._1 }.max
-    val fx = scales.map { case (tag, _) =>
-      val f = facts(tag)
-      s""""hot_templates_$tag":${f.hotTemplates},"head_$tag":${f.headSize},""" +
-        s""""expected_pairs_$tag":${f.expectedPairs}"""
-    }.mkString(",")
-    val body = s"""{"docs_x1":5000,"docs_x10":50000,"docs_x100":500000,""" +
-      s""""cap":$cap,"zipf_s":0.99,$fx,""" +
-      s""""precap_max_bucket_x100":$preMinhash,""" +
-      s""""postcap_max_bucket_x100":$postMinhash,""" +
-      s""""postcap_video_docfreq_x100":$postVideo,""" +
-      s""""hot_pairs_all":0,""" +
-      s""""worst_ratio_x100":${num(worst100)},"queries":{\n""" +
-      items.mkString(",\n") + "\n}}\n"
-    java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(s"[skew] worst x100 ratio ${num(worst100)} -> $out")
-    spark.stop()
   }
 }

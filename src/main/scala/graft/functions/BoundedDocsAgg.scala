@@ -29,7 +29,7 @@ final case class BoundedDocsBuf(n: Long, docs: List[Long])
 object BoundedDocsAgg {
   /** Buffer bound for a group cap of `cap`: cap + 1 (one extra element
     * marks "truncated"), clamped so the cap-disable idiom
-    * `cap = Int.MaxValue` (SkewSoak, fixture pre-cap measurements)
+    * `cap = Int.MaxValue` (the skew specs' pre-cap measurements)
     * stays a valid uncapped collector instead of overflowing to a
     * negative maxKeep and tripping the constructor require.
     */

@@ -302,7 +302,7 @@ object Clustering {
       .select(col("va").cast("long").as("va"), col("vb").cast("long").as("vb"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // r19 strategy split (the dd8/gr1 size-gate discipline, r18
-    // verdict #3): the Cl4Probe forensic showed the distributed tail
+    // verdict #3): a job-listener measurement showed the distributed tail
     // scheduling 19 driver jobs / ~2.2 s over a 698-PAIR materialized
     // graph — pure constants. A pair graph within the gate collects
     // once and the whole core/border/noise/CC tail is driver-side

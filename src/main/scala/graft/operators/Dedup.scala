@@ -34,7 +34,7 @@ import graft.functions.TextHashing
   * map re-executes once per consumer. Repeated calls with the same
   * input reuse the same cache entry (CacheManager canonicalizes), so
   * the entries don't accumulate; batch harnesses that run many
-  * unrelated queries (Bench/Verify) clear the cache between queries.
+  * unrelated queries (Verify) clear the cache between queries.
   *
   * OUTPUT ORDER IS UNSPECIFIED: dd1's output is corpus-sized (one row
   * per distinct text) and the pair lists are unbounded on dup-heavy
@@ -561,8 +561,8 @@ object Dedup {
     * — 65536 at 128 bits, 4.3e9 at 256. The 64-bit default's 256
     * buckets/band saturate around 256·cap documents, at which point
     * the cap correctly drops most buckets and recall collapses
-    * silently (SCALE_SKEW.json `skew_dd4_simhash`: 1.00/0.08/0.00 at
-    * ×1/×10/×100 with wall flat); the wide signature keeps a sub-cap
+    * silently (a planted Zipf(0.99) soak measured 64-bit simhash recall
+    * 1.00/0.08/0.00 at ×1/×10/×100 with wall flat); the wide signature keeps a sub-cap
     * duplicate group's buckets sparse at any web-corpus size. Hamming
     * is measured over the FULL nBits-bit signature (so a fixed
     * `maxHamming` is a relatively tighter similarity bar at 128/256

@@ -284,7 +284,7 @@ object IvfSearch {
     * no completion hook, so the entry is NOT unpersisted here; repeated
     * calls on the same input reuse the one entry (CacheManager
     * canonicalizes), and batch harnesses that run many unrelated
-    * queries (Bench/Verify) clear the SQL cache between queries. A
+    * queries (Verify) clear the SQL cache between queries. A
     * long-lived caller that never clears the cache holds one
     * projection-sized entry per distinct input — call
     * `spark.catalog.clearCache()` (or uncache the input) when done.

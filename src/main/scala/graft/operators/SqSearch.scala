@@ -38,6 +38,52 @@ import org.apache.spark.storage.StorageLevel
   */
 object SqSearch {
 
+  /** `a < b` in Spark's double ordering (`SQLOrderingUtil.compareDoubles`):
+    * NaN is above every number and -0.0 equals 0.0, so a [[DimRange]]
+    * agrees with Spark's `min`/`max` aggregates, NaN included.
+    */
+  private def below(a: Double, b: Double): Boolean =
+    a != b && java.lang.Double.compare(a, b) < 0
+
+  /** Running per-dimension min/max: a partition-local partial over
+    * vectors ([[add]]), or the driver merge of partials ([[merge]]). The
+    * first input seeds it, and a longer input seeds its new dimensions
+    * (the ragged guard).
+    */
+  private final class DimRange {
+    var mn: Array[Double] = null
+    var mx: Array[Double] = null
+
+    def isEmpty: Boolean = mn == null
+
+    def add(v: Array[Double]): Unit = merge(v, v)
+
+    def merge(lo: Array[Double], hi: Array[Double]): Unit =
+      if (mn == null) { mn = lo.clone(); mx = hi.clone() }
+      else {
+        if (lo.length > mn.length) {
+          val old = mn.length
+          mn = java.util.Arrays.copyOf(mn, lo.length)
+          mx = java.util.Arrays.copyOf(mx, lo.length)
+          System.arraycopy(lo, old, mn, old, lo.length - old)
+          System.arraycopy(hi, old, mx, old, lo.length - old)
+        }
+        var j = 0
+        while (j < lo.length) {
+          if (below(lo(j), mn(j))) mn(j) = lo(j)
+          if (below(mx(j), hi(j))) mx(j) = hi(j)
+          j += 1
+        }
+      }
+  }
+
+  /** Driver merge of partition partials (null stats: no vectors). */
+  private def mergeRanges(partials: Iterator[(Array[Double], Array[Double])]): (Array[Double], Array[Double]) = {
+    val r = new DimRange
+    partials.foreach { case (mn, mx) => if (mn != null) r.merge(mn, mx) }
+    (r.mn, r.mx)
+  }
+
   /** SQ8 top-k by asymmetric distance: train per-dimension min/max,
     * encode the corpus to uint8 codes, score every (query, vector)
     * pair by exact-query-vs-decoded-code squared L2, return the k
@@ -72,45 +118,17 @@ object SqSearch {
     // to the degenerate case where nothing needs to shuffle).
     val qSet = queryIds.toSet
     val partials = e.mapPartitions { it =>
-      var mn: Array[Double] = null
-      var mx: Array[Double] = null
+      val r = new DimRange
       val qs = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Double])]
       it.foreach { case (id, v) =>
         if (qSet.contains(id)) qs += ((id, v))
-        if (mn == null) { mn = v.clone(); mx = v.clone() }
-        else {
-          if (v.length > mn.length) { // ragged guard: grow, new dims seed from v
-            val oldLen = mn.length
-            mn = java.util.Arrays.copyOf(mn, v.length)
-            mx = java.util.Arrays.copyOf(mx, v.length)
-            var j = oldLen
-            while (j < v.length) { mn(j) = v(j); mx(j) = v(j); j += 1 }
-          }
-          var j = 0
-          while (j < v.length) {
-            if (v(j) < mn(j)) mn(j) = v(j)
-            if (v(j) > mx(j)) mx(j) = v(j)
-            j += 1
-          }
-        }
+        r.add(v)
       }
-      if (mn == null && qs.isEmpty) Iterator.empty
-      else Iterator((mn, mx, qs.toArray))
+      if (r.isEmpty && qs.isEmpty) Iterator.empty
+      else Iterator((r.mn, r.mx, qs.toArray))
     }.collect()
     require(partials.exists(_._1 != null), "sq8TopK: corpus has no vectors")
-    val dim = partials.iterator.filter(_._1 != null).map(_._1.length).max
-    val mns = Array.fill(dim)(Double.MaxValue)
-    val mxs = Array.fill(dim)(Double.MinValue)
-    partials.foreach { case (mn, mx, _) =>
-      if (mn != null) {
-        var j = 0
-        while (j < mn.length) {
-          if (mn(j) < mns(j)) mns(j) = mn(j)
-          if (mx(j) > mxs(j)) mxs(j) = mx(j)
-          j += 1
-        }
-      }
-    }
+    val (mns, mxs) = mergeRanges(partials.iterator.map(p => (p._1, p._2)))
 
     // query fixture vectors (bounded by |queryIds|, the ANN convention)
     val qRows = partials.flatMap(_._3).distinctBy(_._1).sortBy(_._1)
@@ -206,46 +224,17 @@ object SqSearch {
     val qSet = queryIds.toSet
     val partials = e.mapPartitions { it =>
       val cs = bcCs.value
-      var mn: Array[Double] = null
-      var mx: Array[Double] = null
+      val r = new DimRange
       val qs = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Double])]
       it.foreach { case (id, v) =>
         if (qSet.contains(id)) qs += ((id, v))
-        val r = PqSearch.residual(v, cs(IvfSearch.nearestCell(v, cs)))
-        if (mn == null) { mn = r.clone(); mx = r.clone() }
-        else {
-          if (r.length > mn.length) { // ragged guard: grow, new dims seed from r
-            val oldLen = mn.length
-            mn = java.util.Arrays.copyOf(mn, r.length)
-            mx = java.util.Arrays.copyOf(mx, r.length)
-            var j = oldLen
-            while (j < r.length) { mn(j) = r(j); mx(j) = r(j); j += 1 }
-          }
-          var j = 0
-          while (j < r.length) {
-            if (r(j) < mn(j)) mn(j) = r(j)
-            if (r(j) > mx(j)) mx(j) = r(j)
-            j += 1
-          }
-        }
+        r.add(PqSearch.residual(v, cs(IvfSearch.nearestCell(v, cs))))
       }
-      if (mn == null && qs.isEmpty) Iterator.empty
-      else Iterator((mn, mx, qs.toArray))
+      if (r.isEmpty && qs.isEmpty) Iterator.empty
+      else Iterator((r.mn, r.mx, qs.toArray))
     }.collect()
     require(partials.exists(_._1 != null), "ivfSqTopK: corpus has no vectors")
-    val dim = partials.iterator.filter(_._1 != null).map(_._1.length).max
-    val mns = Array.fill(dim)(Double.MaxValue)
-    val mxs = Array.fill(dim)(Double.MinValue)
-    partials.foreach { case (mn, mx, _) =>
-      if (mn != null) {
-        var j = 0
-        while (j < mn.length) {
-          if (mn(j) < mns(j)) mns(j) = mn(j)
-          if (mx(j) > mxs(j)) mxs(j) = mx(j)
-          j += 1
-        }
-      }
-    }
+    val (mns, mxs) = mergeRanges(partials.iterator.map(p => (p._1, p._2)))
     // bounded query panel: per probed cell, the query's RESIDUAL
     // against that cell's centroid (FAISS residual-ADC convention)
     val qRows = partials.flatMap(_._3).distinctBy(_._1).sortBy(_._1)
@@ -356,40 +345,12 @@ object SqSearch {
     import spark.implicits._
     val partials = PqSearch.project(corpus, idCol, vecCol)
       .mapPartitions { it =>
-        var mn: Array[Double] = null
-        var mx: Array[Double] = null
-        it.foreach { case (_, v) =>
-          if (mn == null) { mn = v.clone(); mx = v.clone() }
-          else {
-            if (v.length > mn.length) { // ragged guard: grow, new dims seed from v
-              val oldLen = mn.length
-              mn = java.util.Arrays.copyOf(mn, v.length)
-              mx = java.util.Arrays.copyOf(mx, v.length)
-              var j = oldLen
-              while (j < v.length) { mn(j) = v(j); mx(j) = v(j); j += 1 }
-            }
-            var j = 0
-            while (j < v.length) {
-              if (v(j) < mn(j)) mn(j) = v(j)
-              if (v(j) > mx(j)) mx(j) = v(j)
-              j += 1
-            }
-          }
-        }
-        if (mn == null) Iterator.empty else Iterator((mn, mx))
+        val r = new DimRange
+        it.foreach { case (_, v) => r.add(v) }
+        if (r.isEmpty) Iterator.empty else Iterator((r.mn, r.mx))
       }.collect()
     require(partials.nonEmpty, "fitSqModel: corpus has no vectors")
-    val dim = partials.iterator.map(_._1.length).max
-    val mns = Array.fill(dim)(Double.MaxValue)
-    val mxs = Array.fill(dim)(Double.MinValue)
-    partials.foreach { case (mn, mx) =>
-      var j = 0
-      while (j < mn.length) {
-        if (mn(j) < mns(j)) mns(j) = mn(j)
-        if (mx(j) > mxs(j)) mxs(j) = mx(j)
-        j += 1
-      }
-    }
+    val (mns, mxs) = mergeRanges(partials.iterator)
     SqModel(mns, mxs)
   }
 

@@ -390,8 +390,8 @@ object TrainingPipeline {
     // feed curriculum AND the final join — without the persists the
     // typed classifier pass + semi-join re-execute once per consumer
     // (round-12 re-measure: persisting both cuts the warm composition
-    // ~2.8 s -> ~1.6 s at sf0.1, reversing round 11's negative result —
-    // see BENCH_NOTES). The returned cleanup thunk is the unpersist
+    // ~2.8 s -> ~1.6 s at sf0.1, reversing round 11's negative
+    // result). The returned cleanup thunk is the unpersist
     // path; the unmanaged overload documents the clearCache convention.
     val screened = documents
       .select(col(idCol).cast("long").as("doc_id"), col(textCol))

@@ -3982,11 +3982,6 @@ object DataPipeline {
     ("r", "ow"), ("at", "c"), ("atc", "h"), ("b", "atch"), ("a", "n"),
     ("c", "an"), ("s", "can"), ("c", "o"), ("c", "u"))
 
-  /** The bench merge table, exposed for [[graft.bench.PplProbe]]'s
-    * forensics so probe timings segment the exact tok5/tok6 shapes.
-    */
-  private[graft] def bpeMergesForProbe: Seq[(String, String)] = BpeMerges
-
   /** DuckDB fragment segmenting one word under [[BpeMerges]] by string
     * rewriting: symbols are wrapped in U+0001 on BOTH sides
     * (`\x01a\x01\x01b\x01...`), and each merge is one `replace()` of
@@ -4459,9 +4454,9 @@ object DataPipeline {
        |SELECT CAST(bucket AS BIGINT) AS bucket, weight
        |FROM w2 WHERE weight <> 0 ORDER BY bucket""".stripMargin) { (s, d) =>
     // batched (Gram-statistics) trainer: trajectory spec-pinned EQUAL to
-    // the iterative path, and faster even at 2 iters (TrainBench:
-    // 0.44 vs 1.35 s at sf0.1 — the per-iter job constants exceed the
-    // one-shot Gram pass on this corpus shape)
+    // the iterative path, and faster even at 2 iters (measured 0.44 vs
+    // 1.35 s at sf0.1 — the per-iter job constants exceed the one-shot
+    // Gram pass on this corpus shape)
     TextAnalysis.trainQualityWeightsBatched(trainLabeled(s, d), iters = 2)
       .filter(col("weight") =!= 0.0)
       .orderSmall("bucket")

@@ -76,8 +76,9 @@ import graft.runtime.StatefulOperator
   * @param fileInputDir client events enter through a durable file source
   *   at this path instead of an in-memory stream: the replayable source a
   *   restart needs (Kafka plays this role in production, see
-  *   [[KafkaEventBridge]]). Events of one send keep their order; events
-  *   of different sends that share a batch need not.
+  *   [[KafkaEventBridge]]). A batch applies its files in name order, and
+  *   a send's file name carries a monotone sequence, so sends that share
+  *   a batch are applied in send order.
   * @param maxDrainRounds drain rounds per batch before the remaining
   *   continuations spill into the ingress for the next batch
   */
@@ -124,7 +125,7 @@ final class StreamingEntityRuntime(
   @volatile private var driverCollected = 0L
   @volatile private var drainedHops = 0L
 
-  private def processBatch(batchId: Long, events: Array[Event]): Unit = storeLock.synchronized {
+  private def processBatch(batchId: Long, events: Array[Event]): Unit = if (events.nonEmpty) storeLock.synchronized {
     var groups = groupByKey(events.toSeq)
     val overlay = mutable.LinkedHashMap.empty[Key, Option[State]]
     var round = 0
@@ -146,7 +147,7 @@ final class StreamingEntityRuntime(
       round += 1
     }
     // the next trigger resumes the drain where this batch stopped
-    if (groups.nonEmpty) enqueue(groups.valuesIterator.flatten.toSeq, Some(f"spill-$batchId%012d"))
+    if (groups.nonEmpty) enqueue(groups.valuesIterator.flatten.toSeq, Some(spillName(batchId)))
     if (overlay.nonEmpty) {
       changelog.foreach(writeEntries(_, deltaName(batchId), overlay.toArray))
       merge(overlay)
@@ -215,20 +216,27 @@ final class StreamingEntityRuntime(
   }
 
   private val query: StreamingQuery = {
-    val ingress: Dataset[Event] = fileInput match {
+    val writer = fileInput match {
       case Some(in) =>
-        spark.readStream.text(in.toString).select("value").as[String].map(EventBinary.decode(_))
-      case None => input.toDS()
+        implicit val fileEnc: Encoder[(String, Long, Event)] =
+          Encoders.tuple(Encoders.STRING, Encoders.scalaLong, eventEnc)
+        spark.readStream.text(in.toString)
+          .selectExpr("_metadata.file_name", "_metadata.file_block_start", "value")
+          .as[(String, Long, String)].map { case (f, at, v) => (f, at, EventBinary.decode(v)) }
+          .writeStream.foreachBatch { (batch: Dataset[(String, Long, Event)], batchId: Long) =>
+            // the scan orders its splits by size, not by name: a stable
+            // sort restores send order, and line order within a file
+            processBatch(batchId, batch.collect().sortBy(r => (r._1, r._2)).map(_._3))
+          }
+      case None =>
+        input.toDS().writeStream.foreachBatch { (batch: Dataset[Event], batchId: Long) =>
+          processBatch(batchId, batch.collect())
+        }
     }
-    ingress.writeStream
+    writer
       .queryName("graft-entity-runtime")
       .option("checkpointLocation", ckpt.toString)
       .trigger(Trigger.ProcessingTime(0))
-      .foreachBatch { (batch: Dataset[Event], batchId: Long) =>
-        val evs = batch.collect()
-        if (evs.nonEmpty) processBatch(batchId, evs)
-        ()
-      }
       .start()
   }
 
@@ -287,7 +295,7 @@ final class StreamingEntityRuntime(
     */
   private def enqueue(evs: Seq[Event], name: Option[String] = None): Unit = fileInput match {
     case Some(in) =>
-      val file = name.getOrElse(java.util.UUID.randomUUID().toString) + ".txt"
+      val file = name.getOrElse(sendName()) + ".txt"
       // staged as a dotfile IN the ingress dir (same filesystem, so the
       // rename is atomic; the file source ignores dot-prefixed names)
       val staged = in.resolve("." + file + "." + java.util.UUID.randomUUID())
@@ -393,6 +401,23 @@ object StreamingEntityRuntime {
     }
     DrainOut(key, out.result(), cur, changed = cur != state0)
   }
+
+  // ---- ingress file names: a batch applies its files in name order ----
+
+  private val sendSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** A send's file: a sequence that rises with every send in this JVM and
+    * follows the wall clock (µs) across restarts, then a unique suffix.
+    */
+  private def sendName(): String = {
+    val seq = sendSeq.updateAndGet(prev => math.max(prev + 1, System.currentTimeMillis() * 1000L))
+    f"1-send-$seq%020d-${java.util.UUID.randomUUID()}"
+  }
+
+  /** A drain spill continues flows sent earlier, so it sorts ahead of
+    * every send; named by batch id, a replayed batch rewrites the same file.
+    */
+  private def spillName(batchId: Long): String = f"0-spill-$batchId%012d"
 
   // ---- changelog ----------------------------------------------------
 

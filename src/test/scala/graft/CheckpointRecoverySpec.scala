@@ -180,4 +180,42 @@ class CheckpointRecoverySpec extends SparkSpec {
     assert(replies.values.exists(_.size == 2), "the dropped batch must have been replayed")
     assertConsistent(ops, got)
   }
+
+  test("file ingress: sends that share a batch are applied in send order") {
+    val base = Files.createTempDirectory("graft-ingress-order")
+    val (ckpt, in) = (base.resolve("ckpt").toString, base.resolve("in").toString)
+    def life() = new StreamingEntityRuntime(TestEntities.registry, spark,
+      checkpointDir = Some(ckpt), fileInputDir = Some(in))
+    def op(id: String, method: String, args: Map[String, Any]) =
+      Event(s"ord-$id", Entity, key(0), EventType.InvokeStateful, Payload.MethodCall(method, args))
+    val made = create(0, "ord")
+    // a 1-event send, then a larger 3-event send: the replies of the
+    // reads and the final value depend on which is applied first
+    val first = Seq(op("u1", "update", Map("new_value" -> 1)))
+    val second = Seq(op("r1", "read", Map.empty), op("u2", "update", Map("new_value" -> 2)),
+      op("r2", "read", Map.empty))
+    val rt1 = life()
+    rt1.sendAsync(Seq(made))
+    rt1.drain()
+    rt1.close()
+    // both sends reach the ingress while no runtime runs, so the next
+    // life reads them in one batch
+    rt1.sendAsync(first)
+    rt1.sendAsync(second)
+    val rt2 = life()
+    val (got, value, batches) = try {
+      rt2.drain()
+      val got = (first ++ second).map(e => e.eventId -> rt2.takeReply(e.eventId).map(_.payload)).toMap
+      val read = rt2.send(Event("ord-final", Entity, key(0), EventType.GetState, Payload.AttrGet("value")))
+      (got, read.payload, rt2.busyBatches.size)
+    } finally rt2.close()
+    assert(batches === 2, "the two sends must share one batch (then one for the final read)")
+
+    val local = new LocalRuntime(TestEntities.registry)
+    local.send(made)
+    val want = (first ++ second).map(e => e.eventId -> Some(local.send(e).payload)).toMap
+    assert(got === want, "replies must equal a send-order replay")
+    assert(value === Payload.Result(local.store((Entity, key(0)))("value")))
+    assert(value === Payload.Result(2))
+  }
 }

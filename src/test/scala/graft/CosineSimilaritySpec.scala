@@ -20,6 +20,19 @@ class CosineSimilaritySpec extends SparkSpec {
     assert(viaSql === viaCol)
   }
 
+  test("cosine_similarity compiles to a native loop, not an eval fallback") {
+    spark.range(3)
+      .selectExpr("array(cast(id as double), 1.0d) as a", "array(1.0d, 2.0d) as b")
+      .createOrReplaceTempView("codegen_vecs")
+    GraftFunctions.register(spark)
+    val df = spark.sql("SELECT cosine_similarity(a, b) AS s FROM codegen_vecs")
+    val gen = org.apache.spark.sql.execution.debug.codegenString(
+      df.queryExecution.executedPlan)
+    assert(gen.contains(".getDouble("), gen)
+    assert(!gen.contains("CosineSimilarity.nullSafeEval"), gen)
+    assert(df.collect().map(_.getDouble(0)).length === 3)
+  }
+
   test("null inputs yield null, wrong types fail analysis") {
     import spark.implicits._
     val df = Seq((Some(Seq(1.0, 0.0)), Option.empty[Seq[Double]])).toDF("a", "b")

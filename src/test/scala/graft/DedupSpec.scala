@@ -526,6 +526,20 @@ class DedupSpec extends SparkSpec {
     assert(present === 1000L, "a bloom filter must never drop a member")
   }
 
+  test("bloom_might_contain compiles to a direct sketch call, not an eval fallback") {
+    val bf = spark.range(100).selectExpr("xxhash64(cast(id as string)) h")
+      .stat.bloomFilter("h", 100L, 0.01)
+    val bytes = graft.functions.BloomMightContain.serialize(bf)
+    val df = spark.range(10).selectExpr("cast(id as string) s")
+      .select(graft.functions.GraftFunctions.bloom_might_contain(
+        lit(bytes), xxhash64(col("s"))).as("hit"))
+    val gen = org.apache.spark.sql.execution.debug.codegenString(
+      df.queryExecution.executedPlan)
+    assert(gen.contains(".mightContainLong("), gen)
+    assert(!gen.contains("BloomMightContain.nullSafeEval"), gen)
+    assert(df.collect().forall(_.getBoolean(0)), "every member must probe true")
+  }
+
   test("bloom probe with a NULL sketch literal yields NULL, not a planning NPE") {
     import spark.implicits._
     val df = Seq(1L, 2L).toDF("v")

@@ -2,15 +2,15 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** The [[graft.bench.SkewSoak]] invariants at spec scale: a planted
+/** Hot-key caps under skew: a planted
   * Zipf(0.99) template distribution (same-template documents
   * byte-identical — the worst-case hot key for every capped banded
   * join at once) must (a) ENGAGE the caps — the head template exceeds
   * the cap, and the post-cap band indexes hold no bucket above it, so
   * per-bucket candidate fan-out is bounded by cap²; (b) BOUND — zero
   * output pairs touch an over-cap template; (c) keep RECALL — sub-cap
-  * duplicate templates pair exactly (J = 1 planted dups). The soak
-  * proves the same three at x100 (SCALE_SKEW.json); this spec pins the
+  * duplicate templates pair exactly (J = 1 planted dups). The corpus
+  * comes from [[graft.bench.SkewSoak.synthSkewDocs]]; this spec pins the
   * invariants in the suite at 3k docs where CappedFixtureSpec's
   * single-hot-block fixtures can't express a full Zipf head.
   */

@@ -178,4 +178,30 @@ class SqSearchSpec extends SparkSpec {
     assert(p.contains("posexplode"),
       s"rank recovery must be the bounded-array posexplode:\n$p")
   }
+
+  test("fitSqModel: per-dimension stats follow Spark's min/max on NaN and signed zero") {
+    import spark.implicits._
+    val nan = Double.NaN
+    // NaN seeds dim 0 (first row) and lands mid-stream in dim 1; dim 2
+    // mixes -0.0 and 0.0; dim 3 is all NaN
+    val df = Seq(
+      (0L, Array(nan, 1.0, 0.0, nan)),
+      (1L, Array(2.0, 5.0, -0.0, nan)),
+      (2L, Array(-1.0, nan, 3.0, nan)),
+      (3L, Array(4.0, 2.0, -2.0, nan))).toDF("vec_id", "embedding")
+    val spk = df.select(posexplode(col("embedding")).as(Seq("j", "x")))
+      .groupBy("j").agg(min("x"), max("x")).orderBy("j").collect()
+    // Spark's order has NaN on top and -0.0 == 0.0
+    def canon(xs: Seq[Double]): Seq[String] =
+      xs.map(x => if (x.isNaN) "NaN" else (x + 0.0).toString)
+    val wantMn = canon(spk.map(_.getDouble(1)).toSeq)
+    val wantMx = canon(spk.map(_.getDouble(2)).toSeq)
+    assert(wantMn === Seq("-1.0", "1.0", "-2.0", "NaN"))
+    assert(wantMx === Seq("NaN", "NaN", "3.0", "NaN"))
+    Seq(df.coalesce(1), df.repartition(3, col("vec_id"))).foreach { in =>
+      val m = SqSearch.fitSqModel(in)
+      assert(canon(m.mns.toSeq) === wantMn)
+      assert(canon(m.mxs.toSeq) === wantMx)
+    }
+  }
 }
