@@ -129,7 +129,9 @@ object GraphRank {
     * dangling simplification). Scale shape per iteration: two keyed
     * edge×score joins + two dst/src-keyed partial-agg sums + two
     * broadcast-scalar normalizations — nothing global but the two
-    * 1-row totals.
+    * 1-row totals. Each normalization reads its raw scores twice, so it
+    * materializes them first (`localCheckpoint`, one job): the plan
+    * stays the same size however many rounds run.
     *
     * @return (node, hub, authority) in units of 1e-9 of each side's
     *         normalized mass
@@ -178,8 +180,11 @@ object GraphRank {
       var hub = nodes.select(col("node"), lit(MassUnits / n).as("s"))
       var auth: DataFrame = null
       def normalized(raw: DataFrame, key: String): DataFrame = {
-        val tot = raw.agg(sum("raw").as("t"))
-        nodes.join(raw, col("node") === col(key), "left")
+        // read twice (the total and the join): without the eager cut each
+        // normalization would double the plan, 4x per iteration
+        val r = raw.localCheckpoint(eager = true)
+        val tot = r.agg(sum("raw").as("t"))
+        nodes.join(r, col("node") === col(key), "left")
           .crossJoin(broadcast(tot))
           .select(col("node"),
             coalesce(expr(s"(raw * $MassUnits) div t"), lit(0L)).as("s"))

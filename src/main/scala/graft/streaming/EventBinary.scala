@@ -4,18 +4,18 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputFilter, 
 import java.util.Base64
 import graft.model.Event
 
-/** Type-preserving binary codec for INTERNAL hop traffic (the loopback /
-  * "internal" topic). The reference uses pickle between workers
-  * (/root/reference/stateflow/serialization/pickle_serde.py) precisely
-  * because internal traffic must round-trip native types exactly;
+/** Type-preserving binary codec that frames the events of the durable
+  * file ingress ([[StreamingEntityRuntime]]'s `fileInputDir`): one Base64
+  * line per event, so the ingress stays a plain line-oriented text
+  * source. Events must round-trip native types exactly, as the reference's
+  * pickle does between workers (stateflow/serialization/pickle_serde.py
+  * in the reference);
   * [[EventJson]] with its Python-JSON numeric model is the CLIENT
-  * boundary format. Base64 text framing keeps the loopback sink a plain
-  * line-oriented file/topic.
+  * boundary format. Drain rounds inside a batch do not use this codec.
   *
   * Decoding runs under an [[ObjectInputFilter]] allowlist (graft model /
   * flow classes, Scala runtime, core JDK value types): anything that can
-  * write to the loopback directory — or the internal broker topic in the
-  * production swap — would otherwise get arbitrary-gadget
+  * write to the ingress directory would otherwise get arbitrary-gadget
   * deserialization on executors.
   */
 object EventBinary {

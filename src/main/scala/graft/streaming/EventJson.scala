@@ -24,8 +24,8 @@ import graft.flow.FlowState
   * key is "$ref"/"$flow" would be misread; entity state attribute names
   * are author-controlled, so the tags are reserved words of the wire.
   *
-  * The envelope columns are exactly [[KafkaEventBridge.wireSchema]]:
-  * event_id, namespace, name, key, event_type, payload(STRING) — the
+  * The envelope columns are exactly `event_id STRING, namespace STRING,
+  * name STRING, key STRING, event_type STRING, payload STRING` — the
   * payload is itself JSON, nested as a string like the reference's
   * serialized bytes field.
   */

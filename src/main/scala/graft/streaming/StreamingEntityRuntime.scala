@@ -11,7 +11,9 @@ import org.apache.spark.{HashPartitioner, SparkConf, SparkContext}
 import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.serializer.{KryoSerializer, SerializerInstance}
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceRDDPartition, MicroBatchScanExec}
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, MemoryStreamInputPartition, StreamingQueryWrapper}
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 import org.apache.spark.storage.StorageLevel
 import graft.model._
@@ -42,18 +44,29 @@ import graft.runtime.StatefulOperator
   *     on the partitions hosting its keys ([[PartitionPruningRDD]]), and a
   *     task finds its keys by lookup, not by scan.
   *   - **Drain rounds**: round 0 groups the batch's client events by key;
-  *     each round runs [[StatefulOperator.handle]] executor-side, one task
-  *     per touched partition, each task receiving only its own keys.
+  *     each round runs [[StatefulOperator.handle]] per key. A key an
+  *     earlier round of the batch returned runs on the driver over the
+  *     state that round returned; the others need their store rows, so
+  *     they run in one job, one task per touched partition, each task
+  *     receiving only its own keys. A round with no such key runs no job.
   *     Replies go to the client; continuations become the next round's
   *     events at once. Rounds are bounded by flow depth, capped by
-  *     `maxDrainRounds` with a next-batch spill for liveness.
+  *     `maxDrainRounds` (driver rounds count too) with a next-batch spill
+  *     for liveness.
+  *   - **Jobs per batch**: an in-memory batch's rows are read on the
+  *     driver, where MemoryStream holds them, so the input costs no job
+  *     (the file ingress collects its batch: one job). Then one job per
+  *     round that reaches a key not yet read: one for single-key ops, two
+  *     for a transfer (payer, payee; the answer back on the payer runs on
+  *     the driver), plus a lineage cut every [[CompactEvery]] merges.
   *   - **Overlay**: states written this batch stay in a driver-held map
   *     between rounds (authoritative over the store) and merge into the
   *     store once per batch in one narrow pass that copies each map it
   *     touches (a map is never changed once built, so a retried task sees
   *     the same input), as Spark's HDFS-backed state store copies its map
-  *     per version. The overlay is batch-bounded, the same driver budget
-  *     as the reply collect; state itself never sits on the driver. Merged
+  *     per version. The overlay, like the states the batch's rounds
+  *     returned, lives for one batch: the same driver budget as the
+  *     replies; the store itself never sits on the driver. Merged
   *     versions persist lazily, and every [[CompactEvery]] merges a
   *     `localCheckpoint` cuts the lineage. Round work, round results and
   *     merges travel Kryo-encoded, several times cheaper than the Java
@@ -75,8 +88,8 @@ import graft.runtime.StatefulOperator
   *   checkpoint is a session temp dir and state is not persisted
   * @param fileInputDir client events enter through a durable file source
   *   at this path instead of an in-memory stream: the replayable source a
-  *   restart needs (Kafka plays this role in production, see
-  *   [[KafkaEventBridge]]). A batch applies its files in name order, and
+  *   restart needs (a broker topic would play this role in production).
+  *   A batch applies its files in name order, and
   *   a send's file name carries a monotone sequence, so sends that share
   *   a batch are applied in send order.
   * @param maxDrainRounds drain rounds per batch before the remaining
@@ -127,11 +140,15 @@ final class StreamingEntityRuntime(
 
   private def processBatch(batchId: Long, events: Array[Event]): Unit = if (events.nonEmpty) storeLock.synchronized {
     var groups = groupByKey(events.toSeq)
+    // every key a round returned, changed or not: later rounds run it on
+    // the driver; only the overlay (changed keys) is logged and merged
+    val known = mutable.HashMap.empty[Key, Option[State]]
     val overlay = mutable.LinkedHashMap.empty[Key, Option[State]]
     var round = 0
     while (groups.nonEmpty && round < maxDrainRounds) {
       val conts = Vector.newBuilder[Event]
-      runRound(groups, overlay).foreach { r =>
+      runRound(groups, known).foreach { r =>
+        known(r.key) = r.state
         // an unchanged key keeps its store row: a read writes nothing
         if (r.changed) overlay(r.key) = r.state
         r.out.foreach { ev =>
@@ -155,22 +172,30 @@ final class StreamingEntityRuntime(
     lastMerged = batchId
   }
 
-  /** One drain round: each touched partition's task folds its keys'
-    * events over their state (the overlay's if the key was written this
-    * batch, else the store row) and returns the results.
+  /** One drain round. A key an earlier round of the batch returned runs
+    * on the driver over its known state; the others need their store
+    * rows, so they run in one job, one task per touched partition. A
+    * round with no such key runs no job. Results come in partition order,
+    * then in the keys' first-seen order, wherever they ran.
     */
   private def runRound(
       groups: mutable.LinkedHashMap[Key, Vector[Event]],
-      overlay: mutable.LinkedHashMap[Key, Option[State]]): Array[DrainOut] = {
-    val byPid = groups.toVector.map { case (k, evs) => Work(k, overlay.get(k), evs) }
-      .groupBy(w => partitioner.getPartition(w.key))
-    // a plain Set: the prune filter stays in the lineage the tasks ship
-    val pids = byPid.keys.toSet
-    val reg = registry
-    PartitionPruningRDD.create(
-      base.zipPartitions(slices(byPid)) { (parts, ws) =>
-        Iterator.single(Wire.encode(runPartition(reg, Wire.decode[Vector[Work]](ws.next()), parts.next())))
-      }, pids.contains).collect().flatMap(Wire.decode[Array[DrainOut]](_))
+      known: mutable.HashMap[Key, Option[State]]): Seq[DrainOut] = {
+    val (local, remote) = groups.partition { case (k, _) => known.contains(k) }
+    val out = mutable.HashMap.empty[Key, DrainOut]
+    if (remote.nonEmpty) {
+      val byPid = remote.toVector.map { case (k, evs) => Work(k, evs) }
+        .groupBy(w => partitioner.getPartition(w.key))
+      // a plain Set: the prune filter stays in the lineage the tasks ship
+      val pids = byPid.keys.toSet
+      val reg = registry
+      PartitionPruningRDD.create(
+        base.zipPartitions(slices(byPid)) { (parts, ws) =>
+          Iterator.single(Wire.encode(runPartition(reg, Wire.decode[Vector[Work]](ws.next()), parts.next())))
+        }, pids.contains).collect().foreach(Wire.decode[Array[DrainOut]](_).foreach(r => out(r.key) = r))
+    }
+    local.foreach { case (k, evs) => out(k) = runKey(registry, k, known(k), evs) }
+    groups.keysIterator.toVector.sortBy(partitioner.getPartition).map(out)
   }
 
   /** One Kryo-encoded slice per store partition, so a task ships only
@@ -215,6 +240,39 @@ final class StreamingEntityRuntime(
     retained.clear()
   }
 
+  // Batch bodies run on the stream thread only, so one decoder serves them.
+  private lazy val fromRow = input.encoder.resolveAndBind().createDeserializer()
+
+  /** A MemoryStream batch's events, decoded on the driver from the input
+    * partitions Spark planned for the batch: the rows already sit here,
+    * so reading them takes no job. Nothing runs the scan, so its row
+    * metric, which progress reports as `numInputRows`, is counted here.
+    * Any other plan shape fails the batch.
+    */
+  private def memoryBatch(batch: Dataset[Event]): Array[Event] = {
+    def unexpected(what: Any) = throw new IllegalStateException(s"unexpected ingress batch plan: $what")
+    val scan = query.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      .collect { case s: MicroBatchScanExec if s.stream eq input => s } match {
+      case Seq(s) => s
+      case scans => unexpected(s"${scans.size} scans of the ingress")
+    }
+    // the batch reads the scan's RDD, so the scan's rows are the batch's
+    def lineage(r: RDD[_]): Iterator[RDD[_]] = Iterator.single(r) ++ r.dependencies.iterator.flatMap(d => lineage(d.rdd))
+    batch.queryExecution.logical match {
+      case l: LogicalRDD if lineage(l.rdd).exists(_ eq scan.inputRDD) =>
+      case p => unexpected(p.nodeName)
+    }
+    val evs = scan.inputRDD.partitions.iterator.flatMap {
+      case p: DataSourceRDDPartition => p.inputPartitions.iterator.flatMap {
+        case m: MemoryStreamInputPartition => m.records.iterator.map(fromRow)
+        case other => unexpected(other)
+      }
+      case other => unexpected(other)
+    }.toArray
+    scan.metrics("numOutputRows").add(evs.length.toLong)
+    evs
+  }
+
   private val query: StreamingQuery = {
     val writer = fileInput match {
       case Some(in) =>
@@ -230,7 +288,7 @@ final class StreamingEntityRuntime(
           }
       case None =>
         input.toDS().writeStream.foreachBatch { (batch: Dataset[Event], batchId: Long) =>
-          processBatch(batchId, batch.collect())
+          processBatch(batchId, memoryBatch(batch))
         }
     }
     writer
@@ -360,10 +418,8 @@ object StreamingEntityRuntime {
   /** Merges between lineage cuts of the state store. */
   val CompactEvery = 16
 
-  /** One key's share of a drain round: its events, and its overlay state
-    * when the key was written earlier in the batch.
-    */
-  private[streaming] final case class Work(key: Key, overlay: Option[Option[State]], events: Vector[Event])
+  /** One key's share of a drain round's job: its events. */
+  private[streaming] final case class Work(key: Key, events: Vector[Event])
 
   /** Per-key drain step result: output events and the key's new state.
     * `changed` is value equality against the state the fold started
@@ -381,12 +437,10 @@ object StreamingEntityRuntime {
   }
 
   /** Executor side of a drain round for one partition: fold each key's
-    * events over its overlay state, else its store state.
+    * events over its store state.
     */
   private[streaming] def runPartition(registry: EntityRegistry, work: Vector[Work], part: Part): Array[DrainOut] =
-    work.iterator.map { w =>
-      runKey(registry, w.key, w.overlay.getOrElse(Option(part.get(w.key))), w.events)
-    }.toArray
+    work.iterator.map(w => runKey(registry, w.key, Option(part.get(w.key)), w.events)).toArray
 
   /** Apply [[StatefulOperator.handle]] over one key's events in order. */
   private[streaming] def runKey(registry: EntityRegistry, key: Key, state0: Option[State],

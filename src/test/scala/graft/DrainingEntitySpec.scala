@@ -1,7 +1,9 @@
 package graft
 
-import graft.model.{Event, EventType, Payload, TestEntities}
+import graft.flow.FlowRegistry
+import graft.model.{EntityRef, Event, EventType, Payload, TestEntities}
 import graft.runtime.{Client, EventTransport}
+import graft.runtime.local.LocalRuntime
 import graft.streaming.StreamingEntityRuntime
 
 /** The S1-S11 scenario gate on the DURABLE configuration of the draining
@@ -162,5 +164,112 @@ class DrainingEntitySpec extends EntityScenarios with SparkSpec {
     val Right(re) = c.create("User", Map("username" -> "u0"))
     assert(re.key === refs.head.key)
     assert(rt.driverCollectedCount > 0)
+  }
+
+  // ---- where drain rounds run: jobs per batch ----
+
+  private val Ycsb = "YCSBEntity"
+
+  private def ycsbCreate(k: String) = Event(s"c-$k", Ycsb, k, EventType.InitClass,
+    Payload.CreateArgs(Map("key" -> k, "value" -> 100)))
+
+  private def transfer(id: String, from: String, to: String) = {
+    TestEntities.registerFlows()
+    Event(id, Ycsb, from, EventType.EventFlow, Payload.FlowPayload(
+      FlowRegistry.instantiate(s"$Ycsb.transfer", EntityRef(Ycsb, from),
+        Map("transfer_amount" -> 1, "other_entity" -> EntityRef(Ycsb, to)))))
+  }
+
+  /** A fresh in-memory runtime with `keys` created (in their own batch). */
+  private def ycsbRuntime(keys: Seq[String]): StreamingEntityRuntime = {
+    val rt = track(new StreamingEntityRuntime(TestEntities.registry, spark))
+    rt.sendAsync(keys.map(ycsbCreate))
+    rt.drain()
+    rt
+  }
+
+  /** Send `evs` at once and drain them: the jobs Spark started meanwhile,
+    * and the replies. Asserts they formed one micro-batch of exactly
+    * those input rows.
+    */
+  private def oneBatch(rt: StreamingEntityRuntime, evs: Seq[Event]): (Int, Seq[Event]) = {
+    val marker = s"marker-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(s"job ${js.jobId}")): Unit
+    }
+    val sc = spark.sparkContext
+    val batchesBefore = rt.busyBatches.size
+    sc.addSparkListener(listener)
+    try {
+      rt.sendAsync(evs)
+      rt.drain()
+      // the listener bus delivers in order: once a marker job's start
+      // arrives, every job the batch started has been counted
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count(): Unit
+      finally sc.setJobDescription(null)
+      var spins = 0
+      while (!jobs.contains(marker) && spins < 400) { Thread.sleep(25); spins += 1 }
+      assert(jobs.contains(marker), "the listener bus did not deliver the marker job")
+      assert(rt.busyBatches.size - batchesBefore === 1, "the events must form one micro-batch")
+      val batchId = rt.busyBatches.last._1
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      assert(rt.progressJson.map(mapper.readTree).filter(_.get("batchId").asLong == batchId)
+        .map(_.get("numInputRows").asLong) === Seq(evs.size.toLong))
+      (jobs.size - 1, evs.map(e => rt.takeReply(e.eventId).getOrElse(fail(s"no reply for ${e.eventId}"))))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private val pairs = (0 until 8).map(i => (s"jp$i", s"jq$i"))
+
+  test("jobs per batch: transfers over distinct keys run 2 jobs, one per round that reads the store") {
+    // a transfer hops a -> b -> a: round 0 reads the payers, round 1 the
+    // payees, round 2 answers on payers round 0 returned, so it runs on
+    // the driver; the in-memory input needs no job
+    val rt = ycsbRuntime(pairs.flatMap { case (a, b) => Seq(a, b) })
+    val (jobs, replies) = oneBatch(rt, pairs.map { case (a, b) => transfer(s"jt-$a", a, b) })
+    assert(jobs === 2, s"a batch of distinct-key transfers ran $jobs jobs")
+    assert(replies.forall(_.payload == Payload.Result(true)), replies)
+  }
+
+  test("jobs per batch: single-key updates run 1 job") {
+    val keys = pairs.map(_._1)
+    val rt = ycsbRuntime(keys)
+    // two updates then a read per key: the read sees the second update
+    // only if the batch keeps send order
+    val ops = keys.flatMap { k =>
+      Seq(7, 8).map(v => Event(s"ju-$k-$v", Ycsb, k, EventType.InvokeStateful,
+        Payload.MethodCall("update", Map("new_value" -> v)))) :+
+        Event(s"jr-$k", Ycsb, k, EventType.InvokeStateful, Payload.MethodCall("read", Map.empty))
+    }
+    val (jobs, replies) = oneBatch(rt, ops)
+    assert(jobs === 1, s"a batch of single-key updates ran $jobs jobs")
+    val local = new LocalRuntime(TestEntities.registry)
+    keys.foreach(k => local.send(ycsbCreate(k)))
+    assert(replies.map(_.payload) === ops.map(op => local.send(op).payload))
+  }
+
+  test("overlapping transfers in one batch: rounds split between driver and executors, same as a LocalRuntime") {
+    // the cycle x0 -> x1 -> x2 -> x0 plus x0 -> x4 and x3 -> x5: round 1
+    // runs x0..x2 (returned by round 0) on the driver and x4, x5 (never
+    // read yet) in a job; round 2 answers on known payers only
+    val keys = (0 until 6).map(i => s"x$i")
+    val ops = Seq((0, 1), (1, 2), (2, 0), (0, 4), (3, 5)).zipWithIndex.map { case ((a, b), i) =>
+      transfer(s"ov-$i", keys(a), keys(b))
+    }
+    val rt = ycsbRuntime(keys)
+    val (jobs, replies) = oneBatch(rt, ops)
+    assert(jobs === 2, s"round 0 and round 1 read store rows, round 2 none: saw $jobs jobs")
+    val local = new LocalRuntime(TestEntities.registry)
+    keys.foreach(k => local.send(ycsbCreate(k)))
+    assert(replies.map(_.payload) === ops.map(op => local.send(op).payload))
+    val reads = keys.map(k => Event(s"ov-read-$k", Ycsb, k, EventType.GetState, Payload.AttrGet("value")))
+    rt.sendAsync(reads)
+    rt.drain()
+    assert(reads.map(r => rt.takeReply(r.eventId).map(_.payload)) ===
+      keys.map(k => Some(Payload.Result(local.store((Ycsb, k))("value")))))
   }
 }

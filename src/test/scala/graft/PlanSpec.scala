@@ -1343,4 +1343,13 @@ class PlanSpec extends SparkSpec {
       spark.conf.set("spark.sql.adaptive.enabled", aqe)
     }
   }
+
+  test("hits: the distributed loop's plan does not grow with iters") {
+    import spark.implicits._
+    val e = Seq(("a", "b", 1L), ("b", "a", 1L), ("a", "c", 2L)).toDF("src", "dst", "w")
+    def size(iters: Int): Int = graft.operators.GraphRank.hitsFixedPoint(e, iters, smallGraphMaxEdges = 0)
+      .queryExecution.optimizedPlan.collect { case n => n }.size
+    val (two, four) = (size(2), size(4))
+    assert(four <= 2 * two, s"optimized plan: $two nodes at iters = 2, $four at iters = 4")
+  }
 }
