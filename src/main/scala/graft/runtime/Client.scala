@@ -19,6 +19,9 @@ trait EventTransport {
   * kafka_client.py). Both runtimes implement it: the streaming runtime
   * via its ingress queue + reply map, the LocalRuntime by computing
   * the reply eagerly and stashing it (synchronous machine, async API).
+  * `sendNoWait`, `advance` and `takeReply` accept concurrent callers:
+  * each transport guards its own state (the HTTP gateway calls them
+  * from many threads).
   */
 trait AsyncEventTransport extends EventTransport {
   /** Enqueue without waiting for the reply. */
@@ -27,12 +30,6 @@ trait AsyncEventTransport extends EventTransport {
   def advance(): Unit
   /** Take (at most once) the reply for an event id, if it has landed. */
   def takeReply(eventId: String): Option[Event]
-  /** True when sendNoWait/advance/takeReply tolerate concurrent callers
-    * (the streaming runtime: thread-safe ingress + reply map). False =
-    * single-threaded contract (LocalRuntime); callers must serialize
-    * every touch themselves.
-    */
-  def concurrentSafe: Boolean = false
 }
 
 /** Pending-reply handle — the StateflowFuture analog

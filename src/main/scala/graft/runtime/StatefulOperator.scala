@@ -137,7 +137,8 @@ object StatefulOperator {
       val addr = nodeAddr(fs)
       if (addr != here) {
         // key switch: one hop (the reference pays a broker round-trip
-        // here, dataflow.py:96-106; streaming pays one loopback batch)
+        // here, dataflow.py:96-106; the streaming runtime drains it in
+        // the same micro-batch)
         return (Seq(Event(eventId, addr.entity, addr.key, EventType.EventFlow,
           Payload.FlowPayload(fs))), Some(state))
       }

@@ -3,7 +3,7 @@ package graft.runtime.local
 import scala.collection.mutable
 import graft.model._
 import graft.model.Types._
-import graft.runtime.{AsyncEventTransport, EventTransport, StatefulOperator}
+import graft.runtime.{AsyncEventTransport, StatefulOperator}
 
 /** Synchronous in-memory runtime — the semantics oracle for all scenario
   * tests, mirroring the reference's LocalRuntime
@@ -16,13 +16,14 @@ final class LocalRuntime(registry: EntityRegistry) extends AsyncEventTransport {
   private val handler = StatefulOperator.handle(registry) _
   // async facade over the synchronous machine: replies computed eagerly
   // at sendNoWait, surfaced through the same poll contract the
-  // streaming runtime has — so Client async code is runtime-agnostic
+  // streaming runtime has — so Client async code is runtime-agnostic.
+  // The machine runs one event at a time, so the facade takes this
+  // runtime's lock: concurrent callers (the HTTP gateway) serialize here.
   private val stash = mutable.Map.empty[String, Event]
 
-  override def sendNoWait(ev: Event): Unit = stash(ev.eventId) = send(ev)
+  override def sendNoWait(ev: Event): Unit = synchronized { stash(ev.eventId) = send(ev) }
   override def advance(): Unit = ()
-  override def takeReply(eventId: String): Option[Event] =
-    stash.remove(eventId)
+  override def takeReply(eventId: String): Option[Event] = synchronized { stash.remove(eventId) }
 
   /** Ingress + drain loop (IngressRouter/EgressRouter analog,
     * /root/reference/stateflow/dataflow/dataflow.py:52-210): route the

@@ -9,7 +9,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import graft.model.{EntityRef, EntityRegistry, Event, EventType, Payload}
 import graft.model.Types.Args
-import graft.runtime.{AsyncEventTransport, Client, EventTransport, StateflowFuture}
+import graft.runtime.{AsyncEventTransport, Client, StateflowFuture}
 import graft.streaming.EventJson
 
 /** HTTP serving layer over an entity runtime — the reference's FastAPI
@@ -32,8 +32,8 @@ import graft.streaming.EventJson
   * distinct static route per generated method; with a dynamic registry
   * the discriminator keeps attribute and method namespaces from
   * colliding). Values cross the boundary through [[EventJson]]'s
-  * encode/decode — the same wire serde the Kafka bridge uses, so HTTP
-  * and Kafka clients observe identical JSON value semantics.
+  * encode/decode, the runtime's client-edge format, so HTTP clients
+  * observe the reference's JSON value semantics.
   *
   * Status mapping: unknown entity/method/attr/fn -> 404, malformed JSON
   * -> 400, duplicate create / failed invocation -> 409, reply lost past
@@ -54,38 +54,20 @@ import graft.streaming.EventJson
   * because everything fired between drains rides the next drain
   * together; no request ever holds a lock across a batch cycle.
   *
-  * Lock discipline comes from the transport: `concurrentSafe`
-  * transports (the streaming runtime) are fired/pumped lock-free;
-  * single-threaded transports (LocalRuntime, whose async facade
-  * computes replies eagerly at fire time) take the gateway lock around
-  * every touch — their fire IS the runtime work, so the fast path
-  * responds inline and the pump never runs for them.
+  * The gateway takes no lock: an [[AsyncEventTransport]] accepts
+  * concurrent callers. The streaming runtime is fired and pumped
+  * lock-free; LocalRuntime's async facade computes the reply at fire
+  * time under its own lock, so its fast path responds inline and the
+  * pump never runs for it.
   */
 final class HttpGateway(
     registry: EntityRegistry,
-    transport: EventTransport,
+    transport: AsyncEventTransport,
     port: Int = 0,
     parkTimeoutMs: Long = 60000L) {
 
-  // every transport serves the parked path: native async runtimes
-  // directly, plain synchronous transports through an eager adapter
-  // (the LocalRuntime facade's shape: reply computed at fire time)
-  private val at: AsyncEventTransport = transport match {
-    case a: AsyncEventTransport => a
-    case t =>
-      new AsyncEventTransport {
-        private val stash = scala.collection.mutable.Map.empty[String, Event]
-        override def sendNoWait(ev: Event): Unit = stash(ev.eventId) = t.send(ev)
-        override def advance(): Unit = ()
-        override def takeReply(eventId: String): Option[Event] = stash.remove(eventId)
-        override def send(ev: Event): Event = t.send(ev)
-      }
-  }
-  private val client = new Client(registry, at)
+  private val client = new Client(registry, transport)
   private val mapper = new ObjectMapper()
-  private val lock = new Object
-  private def touch[A](f: => A): A =
-    if (at.concurrentSafe) f else lock.synchronized(f)
 
   private val pool = java.util.concurrent.Executors.newFixedThreadPool(
     math.max(4, Runtime.getRuntime.availableProcessors() / 4),
@@ -124,7 +106,7 @@ final class HttpGateway(
       if (parked.isEmpty)
         pumpSignal.synchronized { if (parked.isEmpty && running) pumpSignal.wait(100) }
       else {
-        try touch(at.advance())
+        try transport.advance()
         catch { case _: InterruptedException => () case _: Exception => () }
         var n = parked.size()
         var completed = 0
@@ -133,7 +115,7 @@ final class HttpGateway(
           val p = parked.poll()
           if (p != null) {
             val done =
-              try touch(p.fut.poll())
+              try p.fut.poll()
               catch { case _: Exception => None }
             done match {
               case Some(r) => completed += 1; respondAsync(p, r)
@@ -163,8 +145,8 @@ final class HttpGateway(
     */
   private def dispatch(ex: HttpExchange, interp: Event => (Int, ObjectNode))(
       fire: => StateflowFuture): Unit = {
-    val fut = touch(fire)
-    touch(fut.poll()) match {
+    val fut = fire
+    fut.poll() match {
       case Some(r) => val (status, body) = interp(r); reply(ex, status, body)
       case None =>
         parked.add(Parked(fut, ex, interp,

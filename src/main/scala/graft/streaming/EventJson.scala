@@ -35,7 +35,7 @@ object EventJson {
   private val mapper = new ObjectMapper()
 
   import EventType._
-  private val AllTypes: Seq[EventType] = Seq(
+  private[streaming] val AllTypes: Seq[EventType] = Seq(
     InitClass, FindClass, GetState, SetState, UpdateState, DeleteState,
     InvokeStateful, InvokeStateless, EventFlow, Ping,
     SuccessfulCreateClass, SuccessfulInvocation, SuccessfulStateRequest,

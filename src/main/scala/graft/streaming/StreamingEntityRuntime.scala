@@ -1,16 +1,12 @@
 package graft.streaming
 
-import java.io.{BufferedInputStream, BufferedOutputStream, ObjectInputFilter, ObjectInputStream, ObjectOutputStream}
-import java.nio.ByteBuffer
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
-import scala.reflect.ClassTag
-import org.apache.spark.{HashPartitioner, SparkConf, SparkContext}
+import org.apache.spark.{HashPartitioner, SparkContext}
 import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
-import org.apache.spark.serializer.{KryoSerializer, SerializerInstance}
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceRDDPartition, MicroBatchScanExec}
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, MemoryStreamInputPartition, StreamingQueryWrapper}
@@ -68,9 +64,12 @@ import graft.runtime.StatefulOperator
   *     returned, lives for one batch: the same driver budget as the
   *     replies; the store itself never sits on the driver. Merged
   *     versions persist lazily, and every [[CompactEvery]] merges a
-  *     `localCheckpoint` cuts the lineage. Round work, round results and
-  *     merges travel Kryo-encoded, several times cheaper than the Java
-  *     serialization Spark applies to task data.
+  *     `localCheckpoint` cuts the lineage.
+  *   - **Bytes**: ingress rows and lines, round work, round results,
+  *     merges and the changelog all use [[EventBinary]], the runtime's
+  *     one codec. A file-ingress line it rejects is skipped and counted
+  *     ([[rejectedInputCount]]): a poison line neither fails the batch
+  *     nor, replayed, the restart.
   *
   * Durability (with `checkpointDir`): the streaming checkpoint lives
   * there and a state changelog beside it (`<checkpointDir>-state`). Each
@@ -82,7 +81,9 @@ import graft.runtime.StatefulOperator
   * source: `fileInputDir`. With the in-memory ingress, input dies with
   * the JVM. Replies are exactly-once across [[close]], which finishes
   * the queued input first, and at-least-once across a crash (a replayed
-  * batch answers again, with the same values).
+  * batch answers again, with the same values). A changelog written
+  * before [[EventBinary]] (a Java serialization stream) is refused at
+  * start: there is no migration.
   *
   * @param checkpointDir durable streaming checkpoint; without it the
   *   checkpoint is a session temp dir and state is not persisted
@@ -106,8 +107,6 @@ final class StreamingEntityRuntime(
   import spark.implicits._
   require(maxDrainRounds >= 1, s"maxDrainRounds must be >= 1, got $maxDrainRounds")
 
-  private implicit val eventEnc: Encoder[Event] = Encoders.kryo[Event]
-
   private val sc = spark.sparkContext
   private val partitioner =
     new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
@@ -117,7 +116,7 @@ final class StreamingEntityRuntime(
     Files.createDirectories(Paths.get(c + "-state"))
   }
   private val fileInput: Option[Path] = fileInputDir.map(d => Files.createDirectories(Paths.get(d)))
-  private val input = MemoryStream[Event](spark, numPartitions = 1)
+  private val input = MemoryStream[Array[Byte]](spark, numPartitions = 1)
   private val replies = new ConcurrentHashMap[String, Event]()
 
   // Batch bodies and changelog compaction take this lock; the store vars
@@ -137,6 +136,7 @@ final class StreamingEntityRuntime(
 
   @volatile private var driverCollected = 0L
   @volatile private var drainedHops = 0L
+  @volatile private var rejectedInput = 0L
 
   private def processBatch(batchId: Long, events: Array[Event]): Unit = if (events.nonEmpty) storeLock.synchronized {
     var groups = groupByKey(events.toSeq)
@@ -166,7 +166,7 @@ final class StreamingEntityRuntime(
     // the next trigger resumes the drain where this batch stopped
     if (groups.nonEmpty) enqueue(groups.valuesIterator.flatten.toSeq, Some(spillName(batchId)))
     if (overlay.nonEmpty) {
-      changelog.foreach(writeEntries(_, deltaName(batchId), overlay.toArray))
+      changelog.foreach(writeEntries(_, deltaName(batchId), overlay.toVector))
       merge(overlay)
     }
     lastMerged = batchId
@@ -190,20 +190,21 @@ final class StreamingEntityRuntime(
       val pids = byPid.keys.toSet
       val reg = registry
       PartitionPruningRDD.create(
-        base.zipPartitions(slices(byPid)) { (parts, ws) =>
-          Iterator.single(Wire.encode(runPartition(reg, Wire.decode[Vector[Work]](ws.next()), parts.next())))
-        }, pids.contains).collect().foreach(Wire.decode[Array[DrainOut]](_).foreach(r => out(r.key) = r))
+        base.zipPartitions(slices(byPid)(EventBinary.works.encode)) { (parts, ws) =>
+          val work = EventBinary.works.decode(ws.next())
+          Iterator.single(EventBinary.results.encode(runPartition(reg, work, parts.next())))
+        }, pids.contains).collect().foreach(EventBinary.results.decode(_).foreach(r => out(r.key) = r))
     }
     local.foreach { case (k, evs) => out(k) = runKey(registry, k, known(k), evs) }
     groups.keysIterator.toVector.sortBy(partitioner.getPartition).map(out)
   }
 
-  /** One Kryo-encoded slice per store partition, so a task ships only
-    * its own keys.
+  /** One encoded slice per store partition, so a task ships only its
+    * own keys.
     */
-  private def slices[A: ClassTag](byPid: Map[Int, Vector[A]]): RDD[Array[Byte]] = {
+  private def slices[A](byPid: Map[Int, Vector[A]])(encode: Seq[A] => Array[Byte]): RDD[Array[Byte]] = {
     val n = partitioner.numPartitions
-    sc.parallelize(Seq.tabulate(n)(p => Wire.encode(byPid.getOrElse(p, Vector.empty[A]))), n)
+    sc.parallelize(Seq.tabulate(n)(p => encode(byPid.getOrElse(p, Vector.empty[A]))), n)
   }
 
   /** Splice the overlay into the store: a touched partition's map is
@@ -211,9 +212,10 @@ final class StreamingEntityRuntime(
     */
   private def merge(overlay: mutable.LinkedHashMap[Key, Option[State]]): Unit = {
     val byPid = overlay.toVector.groupBy { case (k, _) => partitioner.getPartition(k) }
-    val merged = base.zipPartitions(slices(byPid), preservesPartitioning = true) { (parts, us) =>
+    val updates = slices(byPid)(EventBinary.changelog.encode)
+    val merged = base.zipPartitions(updates, preservesPartitioning = true) { (parts, us) =>
       val part = parts.next()
-      val changes = Wire.decode[Vector[(Key, Option[State])]](us.next())
+      val changes = EventBinary.changelog.decode(us.next())
       if (changes.isEmpty) Iterator.single(part)
       else {
         val m = new Part(part)
@@ -240,16 +242,13 @@ final class StreamingEntityRuntime(
     retained.clear()
   }
 
-  // Batch bodies run on the stream thread only, so one decoder serves them.
-  private lazy val fromRow = input.encoder.resolveAndBind().createDeserializer()
-
   /** A MemoryStream batch's events, decoded on the driver from the input
     * partitions Spark planned for the batch: the rows already sit here,
     * so reading them takes no job. Nothing runs the scan, so its row
     * metric, which progress reports as `numInputRows`, is counted here.
     * Any other plan shape fails the batch.
     */
-  private def memoryBatch(batch: Dataset[Event]): Array[Event] = {
+  private def memoryBatch(batch: Dataset[Array[Byte]]): Array[Event] = {
     def unexpected(what: Any) = throw new IllegalStateException(s"unexpected ingress batch plan: $what")
     val scan = query.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
       .collect { case s: MicroBatchScanExec if s.stream eq input => s } match {
@@ -264,7 +263,7 @@ final class StreamingEntityRuntime(
     }
     val evs = scan.inputRDD.partitions.iterator.flatMap {
       case p: DataSourceRDDPartition => p.inputPartitions.iterator.flatMap {
-        case m: MemoryStreamInputPartition => m.records.iterator.map(fromRow)
+        case m: MemoryStreamInputPartition => m.records.iterator.map(r => EventBinary.event.decode(r.getBinary(0)))
         case other => unexpected(other)
       }
       case other => unexpected(other)
@@ -276,18 +275,16 @@ final class StreamingEntityRuntime(
   private val query: StreamingQuery = {
     val writer = fileInput match {
       case Some(in) =>
-        implicit val fileEnc: Encoder[(String, Long, Event)] =
-          Encoders.tuple(Encoders.STRING, Encoders.scalaLong, eventEnc)
         spark.readStream.text(in.toString)
           .selectExpr("_metadata.file_name", "_metadata.file_block_start", "value")
-          .as[(String, Long, String)].map { case (f, at, v) => (f, at, EventBinary.decode(v)) }
-          .writeStream.foreachBatch { (batch: Dataset[(String, Long, Event)], batchId: Long) =>
+          .as[(String, Long, String)]
+          .writeStream.foreachBatch { (batch: Dataset[(String, Long, String)], batchId: Long) =>
             // the scan orders its splits by size, not by name: a stable
             // sort restores send order, and line order within a file
-            processBatch(batchId, batch.collect().sortBy(r => (r._1, r._2)).map(_._3))
+            processBatch(batchId, batch.collect().sortBy(r => (r._1, r._2)).flatMap(r => decodeLine(r._3)))
           }
       case None =>
-        input.toDS().writeStream.foreachBatch { (batch: Dataset[Event], batchId: Long) =>
+        input.toDS().writeStream.foreachBatch { (batch: Dataset[Array[Byte]], batchId: Long) =>
           processBatch(batchId, memoryBatch(batch))
         }
     }
@@ -297,6 +294,16 @@ final class StreamingEntityRuntime(
       .trigger(Trigger.ProcessingTime(0))
       .start()
   }
+
+  /** An ingress line's event; a line the codec rejects is counted and
+    * skipped, so it cannot fail the batch, nor the restart that replays it.
+    */
+  private def decodeLine(line: String): Option[Event] =
+    try Some(EventBinary.decode(line))
+    catch { case _: EventBinary.CodecException => rejectedInput += 1; None }
+
+  /** Ingress lines skipped because the codec rejected them. */
+  def rejectedInputCount: Long = rejectedInput
 
   /** Replies surfaced to the driver (every reply, by construction). */
   def driverCollectedCount: Long = driverCollected
@@ -329,7 +336,7 @@ final class StreamingEntityRuntime(
         val tmpS = tmp.toString
         base.mapPartitionsWithIndex { (pid, parts) =>
           writeEntries(Paths.get(tmpS), f"part-$pid%05d",
-            parts.next().asScala.iterator.map { case (k, s) => (k, Option(s)) }.toArray)
+            parts.next().asScala.iterator.map { case (k, s) => (k, Option(s)) }.toVector)
           Iterator.empty
         }.count(): Unit
         val target = dir.resolve(snapName(label))
@@ -341,10 +348,10 @@ final class StreamingEntityRuntime(
     }
   }
 
-  // MemoryStream.addData runs the kryo row ENCODER before taking its
-  // internal buffer lock, and ExpressionEncoder serializers are not
-  // thread-safe, so the memory path is serialized here; the file path
-  // writes unique names with atomic renames.
+  // MemoryStream.addData runs the row ENCODER before taking its internal
+  // buffer lock, and ExpressionEncoder serializers are not thread-safe,
+  // so the memory path is serialized here; the file path writes unique
+  // names with atomic renames.
   private val enqueueLock = new Object
 
   /** Enqueue events: the memory stream by default; a staged atomic file
@@ -361,7 +368,9 @@ final class StreamingEntityRuntime(
       try evs.foreach { ev => out.write(EventBinary.encode(ev)); out.newLine() }
       finally out.close()
       Files.move(staged, in.resolve(file), StandardCopyOption.ATOMIC_MOVE): Unit
-    case None => enqueueLock.synchronized(input.addData(evs)): Unit
+    case None =>
+      val rows = evs.map(EventBinary.event.encode)
+      enqueueLock.synchronized(input.addData(rows)): Unit
   }
 
   /** Synchronous request/reply: feed the event, run micro-batches until
@@ -383,11 +392,10 @@ final class StreamingEntityRuntime(
   def sendAsync(evs: Seq[Event]): Unit = enqueue(evs)
 
   override def sendNoWait(ev: Event): Unit = enqueue(Seq(ev))
+  // safe from any thread: the ingress takes its own lock (see enqueue),
+  // the reply table is a ConcurrentHashMap, processAllAvailable is a
+  // blocking probe, and batch bodies run on the stream thread
   override def advance(): Unit = drain()
-  // the ingress is safe to feed from any thread (see enqueue), the reply
-  // table is a ConcurrentHashMap, processAllAvailable is a blocking probe
-  // safe from any thread, and batch bodies run on the stream thread
-  override def concurrentSafe: Boolean = true
 
   /** Run micro-batches until all queued input, spills included, is done. */
   def drain(): Unit = query.processAllAvailable()
@@ -439,8 +447,8 @@ object StreamingEntityRuntime {
   /** Executor side of a drain round for one partition: fold each key's
     * events over its store state.
     */
-  private[streaming] def runPartition(registry: EntityRegistry, work: Vector[Work], part: Part): Array[DrainOut] =
-    work.iterator.map(w => runKey(registry, w.key, Option(part.get(w.key)), w.events)).toArray
+  private[streaming] def runPartition(registry: EntityRegistry, work: Seq[Work], part: Part): Seq[DrainOut] =
+    work.map(w => runKey(registry, w.key, Option(part.get(w.key)), w.events))
 
   /** Apply [[StatefulOperator.handle]] over one key's events in order. */
   private[streaming] def runKey(registry: EntityRegistry, key: Key, state0: Option[State],
@@ -507,7 +515,9 @@ object StreamingEntityRuntime {
 
   /** Distributed changelog replay: read every entry executor-side, keep
     * each key's newest row, drop tombstones, land on the store's
-    * partitioner. State never touches the driver.
+    * partitioner. State never touches the driver; the driver reads only
+    * each file's format byte, to refuse at start what the codec did not
+    * write.
     */
   private[streaming] def restore(sc: SparkContext, dir: Path, partitioner: HashPartitioner): RDD[Part] = {
     val files = changelogEntries(dir).flatMap { case (b, p) =>
@@ -515,6 +525,7 @@ object StreamingEntityRuntime {
         .map(f => (b, f.toString))
       else Seq((b, p.toString))
     }
+    files.foreach { case (_, f) => requireFormat(Paths.get(f)) }
     sc.parallelize(files, math.max(1, math.min(files.size, partitioner.numPartitions)))
       .flatMap { case (b, f) => readEntries(Paths.get(f)).iterator.map { case (k, st) => (k, (b, st)) } }
       .reduceByKey(partitioner, (x, y) => if (x._1 >= y._1) x else y)
@@ -525,39 +536,30 @@ object StreamingEntityRuntime {
       }
   }
 
-  /** Kryo for what a drain round ships: events, states, results. A slice
-    * holds a whole batch's share of one partition, hence the buffer cap.
-    */
-  private object Wire {
-    private val kryo = ThreadLocal.withInitial[SerializerInstance](() =>
-      new KryoSerializer(new SparkConf(false).set("spark.kryoserializer.buffer.max", "2047m")).newInstance())
-    def encode[A: ClassTag](a: A): Array[Byte] = {
-      val bb = kryo.get.serialize(a)
-      val out = new Array[Byte](bb.remaining())
-      bb.get(out)
-      out
-    }
-    def decode[A: ClassTag](b: Array[Byte]): A = kryo.get.deserialize[A](ByteBuffer.wrap(b))
-  }
-
   /** Write entries (None = deleted) to `dir/name`, staged and renamed
     * atomically; an existing file of that name is replaced.
     */
-  private[streaming] def writeEntries(dir: Path, name: String, entries: Array[(Key, Option[State])]): Unit = {
+  private[streaming] def writeEntries(dir: Path, name: String, entries: Seq[(Key, Option[State])]): Unit = {
     val staged = dir.resolve(s".$name.${java.util.UUID.randomUUID()}")
-    val out = new ObjectOutputStream(new BufferedOutputStream(Files.newOutputStream(staged)))
-    try out.writeObject(entries) finally out.close()
+    Files.write(staged, EventBinary.changelog.encode(entries))
     Files.move(staged, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE): Unit
   }
 
-  /** Changelog reads accept only the state value graph's classes. */
-  private val stateFilter: ObjectInputFilter = ObjectInputFilter.Config.createFilter(
-    "maxdepth=64;graft.**;scala.**;java.lang.**;java.util.**;java.time.**;!*")
+  private[streaming] def readEntries(file: Path): Seq[(Key, Option[State])] =
+    EventBinary.changelog.decode(Files.readAllBytes(file))
 
-  private[streaming] def readEntries(file: Path): Array[(Key, Option[State])] = {
-    val in = new ObjectInputStream(new BufferedInputStream(Files.newInputStream(file)))
-    in.setObjectInputFilter(stateFilter)
-    try in.readObject().asInstanceOf[Array[(Key, Option[State])]] finally in.close()
+  /** Refuse to start over a changelog file the codec did not write. A
+    * Java serialization stream (magic 0xACED) is the format before
+    * [[EventBinary]]; it has no migration.
+    */
+  private def requireFormat(file: Path): Unit = {
+    val s = Files.newInputStream(file)
+    val head = try s.readNBytes(2) finally s.close()
+    if (!head.headOption.contains(EventBinary.ChangelogFormat)) throw new IllegalStateException(
+      if (head.sameElements(Array(0xAC, 0xED).map(_.toByte)))
+        s"changelog file $file is a Java serialization stream, the format before EventBinary; " +
+          "it has no migration: start from an empty checkpointDir"
+      else s"changelog file $file is not in the EventBinary changelog format")
   }
 
   private def listDir(dir: Path): Seq[Path] =

@@ -218,4 +218,63 @@ class CheckpointRecoverySpec extends SparkSpec {
     assert(value === Payload.Result(local.store((Entity, key(0)))("value")))
     assert(value === Payload.Result(2))
   }
+
+  /** A Java-serialized `java.io.File`: the classic gadget shape. */
+  private def gadgetLine(): String = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val oos = new java.io.ObjectOutputStream(bos)
+    oos.writeObject(new java.io.File("/tmp/gadget"))
+    oos.close()
+    java.util.Base64.getEncoder.encodeToString(bos.toByteArray)
+  }
+
+  test("poison ingress lines are skipped and counted; the rest applies in send order, and restarts serve") {
+    val base = Files.createTempDirectory("graft-poison")
+    val (ckpt, in) = (base.resolve("ckpt").toString, base.resolve("in"))
+    def life() = new StreamingEntityRuntime(TestEntities.registry, spark,
+      checkpointDir = Some(ckpt), fileInputDir = Some(in.toString))
+    val made = create(0, "poison")
+    val update = Event("poison-u", Entity, key(0), EventType.InvokeStateful,
+      Payload.MethodCall("update", Map("new_value" -> 7)))
+    val read = Event("poison-r", Entity, key(0), EventType.InvokeStateful, Payload.MethodCall("read", Map.empty))
+    val rt1 = life()
+    try assert(rt1.send(made).eventType === EventType.SuccessfulCreateClass) finally rt1.close()
+    // while no runtime runs: a send, a garbage line, a gadget line, a send
+    val lines = Seq(EventBinary.encode(update), "not an event %%%", gadgetLine(), EventBinary.encode(read))
+    Files.write(in.resolve("offline-0.txt"), lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+
+    val local = new LocalRuntime(TestEntities.registry)
+    local.send(made)
+    val want = Seq(update, read).map(e => e.eventId -> Some(local.send(e)))
+    val rt2 = life()
+    try {
+      rt2.drain()
+      assert(Seq(update, read).map(e => e.eventId -> rt2.takeReply(e.eventId)) === want)
+      assert(rt2.rejectedInputCount === 2)
+    } finally rt2.close()
+    val rt3 = life()
+    try {
+      val r = rt3.send(Event("poison-r2", Entity, key(0), EventType.GetState, Payload.AttrGet("value")))
+      assert(r.payload === Payload.Result(7))
+      assert(rt3.rejectedInputCount === 0, "a committed batch's poison lines are not replayed")
+    } finally rt3.close()
+  }
+
+  test("a changelog written by Java serialization is refused at start, naming the format") {
+    val base = Files.createTempDirectory("graft-old-changelog")
+    val ckpt = base.resolve("ckpt")
+    // the earlier format: one ObjectOutputStream of the batch's entries,
+    // for a batch the checkpoint committed
+    Files.createDirectories(ckpt.resolve("commits"))
+    Files.write(ckpt.resolve("commits").resolve("0"), "v1\n{}".getBytes("UTF-8"))
+    val state = Files.createDirectories(ckpt.resolveSibling("ckpt-state"))
+    val oos = new java.io.ObjectOutputStream(Files.newOutputStream(state.resolve(f"delta-${0}%012d")))
+    oos.writeObject(Array(((Entity, key(0)), Option(Map[String, Any]("value" -> 1)))))
+    oos.close()
+    val e = intercept[IllegalStateException] {
+      new StreamingEntityRuntime(TestEntities.registry, spark, checkpointDir = Some(ckpt.toString),
+        fileInputDir = Some(base.resolve("in").toString))
+    }
+    assert(e.getMessage.contains("Java serialization stream"), e.getMessage)
+  }
 }

@@ -131,7 +131,7 @@ class EventJsonSpec extends AnyFunSuite {
     oos.writeObject(new java.io.File("/tmp/gadget"))
     oos.close()
     val line = java.util.Base64.getEncoder.encodeToString(bos.toByteArray)
-    intercept[java.io.InvalidClassException] { EventBinary.decode(line) }
+    intercept[EventBinary.CodecException] { EventBinary.decode(line) }
   }
 
   test("payload string is itself valid JSON inside the envelope (wire schema)") {

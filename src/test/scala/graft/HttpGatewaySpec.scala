@@ -168,7 +168,6 @@ class HttpGatewayParkTimeoutSpec extends AnyFunSuite {
     override def sendNoWait(ev: Event): Unit = ()
     override def advance(): Unit = ()
     override def takeReply(eventId: String): Option[Event] = None
-    override def concurrentSafe: Boolean = true
     override def send(ev: Event): Event =
       Event(ev.eventId, "", "", EventType.Pong, Payload.Empty)
   }

@@ -1352,4 +1352,22 @@ class PlanSpec extends SparkSpec {
     val (two, four) = (size(2), size(4))
     assert(four <= 2 * two, s"optimized plan: $two nodes at iters = 2, $four at iters = 4")
   }
+
+  // The other two graph loops: a plan linear in `iters` passes; one that
+  // grows 4x per round, the old HITS shape, does not.
+  private def planGrowth(loop: (org.apache.spark.sql.DataFrame, Int) => org.apache.spark.sql.DataFrame): Unit = {
+    import spark.implicits._
+    val e = Seq(("a", "b", 1L), ("b", "a", 1L), ("a", "c", 2L)).toDF("src", "dst", "w")
+    def size(iters: Int): Int = loop(e, iters).queryExecution.optimizedPlan.collect { case n => n }.size
+    val (two, eight) = (size(2), size(8))
+    assert(eight <= 4 * two, s"optimized plan: $two nodes at iters = 2, $eight at iters = 8")
+  }
+
+  test("pageRank: the distributed loop's plan grows at most linearly with iters") {
+    planGrowth(graft.operators.GraphRank.pageRankFixedPoint(_, _, smallGraphMaxEdges = 0))
+  }
+
+  test("labelPropagation: the distributed loop's plan grows at most linearly with rounds") {
+    planGrowth(graft.operators.GraphRank.labelPropagation(_, _, smallGraphMaxEdges = 0))
+  }
 }
