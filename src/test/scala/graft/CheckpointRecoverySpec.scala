@@ -6,6 +6,7 @@ import graft.model.{EntityRef, Event, EventType, Payload, TestEntities}
 import graft.runtime.Client
 import graft.runtime.local.LocalRuntime
 import graft.streaming.{EventBinary, StreamingEntityRuntime}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 
 /** Durability gate: entity state survives a full runtime restart when
   * the sources are replayable (file ingress) and the checkpoint dir is
@@ -147,13 +148,16 @@ class CheckpointRecoverySpec extends SparkSpec {
   private def transferOk(r: Event): Boolean =
     r.eventType == EventType.SuccessfulInvocation && r.payload == Payload.Result(true)
 
-  test("restart gate: transfers across a close/restart, funds conserved, one reply per op") {
-    val (ops, replies, got) = twoLives("a")((_, _) => ())
+  private def assertOneReplyEach(ops: Seq[Event], replies: Map[String, Seq[Event]]): Unit =
     ops.foreach { o =>
       val rs = replies.getOrElse(o.eventId, Nil)
       assert(rs.size === 1, s"${o.eventId} answered ${rs.size} times")
       assert(transferOk(rs.head), s"${o.eventId}: ${rs.head}")
     }
+
+  test("restart gate: transfers across a close/restart, funds conserved, one reply per op") {
+    val (ops, replies, got) = twoLives("a")((_, _) => ())
+    assertOneReplyEach(ops, replies)
     assertConsistent(ops, got)
   }
 
@@ -179,6 +183,27 @@ class CheckpointRecoverySpec extends SparkSpec {
     }
     assert(replies.values.exists(_.size == 2), "the dropped batch must have been replayed")
     assertConsistent(ops, got)
+  }
+
+  test("restart gate: a checkpoint Spark's default file manager wrote restarts under the runtime's own") {
+    val key = StreamingEntityRuntime.CheckpointFileManagerConf
+    def ids(commits: Path): Set[String] = commits.toFile.list().filter(_.forall(_.isDigit)).toSet
+    var commits: Path = null
+    var life1 = Set.empty[String]
+    // life 1 writes its logs through Hadoop, each entry with a `.crc`
+    val (ops, replies, got) = withSessionConf(key, Some(classOf[FileContextBasedCheckpointFileManager].getName)) {
+      twoLives("c") { (ckpt, _) =>
+        commits = ckpt.resolve("commits")
+        life1 = ids(commits)
+        assert(life1.nonEmpty && life1.forall(b => Files.exists(commits.resolve(s".$b.crc"))))
+        spark.conf.unset(key) // life 2 installs the runtime's manager
+      }
+    }
+    assertOneReplyEach(ops, replies)
+    assertConsistent(ops, got)
+    val life2 = ids(commits) -- life1
+    assert(life2.nonEmpty, "life 2 must have committed batches")
+    assert(life2.forall(b => !Files.exists(commits.resolve(s".$b.crc"))), "life 2 writes no checksum files")
   }
 
   test("file ingress: sends that share a batch are applied in send order") {

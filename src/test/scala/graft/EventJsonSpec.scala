@@ -123,9 +123,9 @@ class EventJsonSpec extends AnyFunSuite {
   }
 
   test("EventBinary rejects non-allowlisted classes (gadget defense)") {
-    // hand-craft a loopback line that deserializes to a class outside the
-    // graft/scala/JDK-value allowlist — the filter must refuse it before
-    // instantiation, not after
+    // a Java-serialized object, the classic gadget shape: the codec reads
+    // its first byte (0xAC, the stream magic) as a tag, knows no such
+    // tag, and rejects the line before decoding anything
     val bos = new java.io.ByteArrayOutputStream()
     val oos = new java.io.ObjectOutputStream(bos)
     oos.writeObject(new java.io.File("/tmp/gadget"))

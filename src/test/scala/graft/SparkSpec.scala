@@ -16,4 +16,14 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Run `body` with the session conf `key` set to `value` (None: unset),
+    * then restore what the shared session held before.
+    */
+  def withSessionConf[T](key: String, value: Option[String])(body: => T): T = {
+    val before = spark.conf.getOption(key)
+    def put(v: Option[String]): Unit = v.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    put(value)
+    try body finally put(before)
+  }
 }
