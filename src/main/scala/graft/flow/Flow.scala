@@ -100,8 +100,6 @@ object Step {
   def refVar(v: String): Env => EntityRef = env => env(v).asInstanceOf[EntityRef]
   def snapshot(v: String, as: String): Step =
     SnapshotS(refVar(v), (env, st) => env + (as -> st))
-  def snapshotF(ref: Env => EntityRef, as: String): Step =
-    SnapshotS(ref, (env, st) => env + (as -> st))
   def invoke(v: String, m: Method, args: Env => Args, resultVar: String): Step =
     InvokeS(refVar(v), m, args, (env, r) => env + (resultVar -> r))
   def invokeF(ref: Env => EntityRef, m: Method, args: Env => Args, resultVar: String): Step =

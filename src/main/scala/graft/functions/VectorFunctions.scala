@@ -21,9 +21,4 @@ object VectorFunctions {
     */
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (norm(a) * norm(b))
-
-  /** Hamming distance between two equal-length bit arrays (array<int>). */
-  def hammingBits(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => when(x === y, 0).otherwise(1)),
-      lit(0), (acc, x) => acc + x)
 }

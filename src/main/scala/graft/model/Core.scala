@@ -53,6 +53,18 @@ object EventType {
   case object KeyNotFound extends Reply
   case object FailedInvocation extends Reply
   case object Pong extends Reply
+
+  /** Every event type, in the order that numbers them: a type's position
+    * is its tag in [[graft.streaming.EventBinary]], which the durable
+    * file ingress keeps on disk and has no migration for. Append-only: a
+    * new type goes at the end; moving or removing one makes stored
+    * events decode as another type.
+    */
+  val All: Seq[EventType] = Seq(
+    InitClass, FindClass, GetState, SetState, UpdateState, DeleteState,
+    InvokeStateful, InvokeStateless, EventFlow, Ping,
+    SuccessfulCreateClass, SuccessfulInvocation, SuccessfulStateRequest,
+    FoundClass, KeyNotFound, FailedInvocation, Pong)
 }
 
 /** Typed payload variants (the reference ships pickled dicts; we keep a

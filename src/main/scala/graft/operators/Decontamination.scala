@@ -322,22 +322,6 @@ object Decontamination {
       evalSide(evalDocs, textCol, gramSize, maxCollectedShingles),
       gramSize, idCol, textCol)
 
-  /** [[decontaminate]] against a [[PreparedEval]] handle — the reusable
-    * form for batch loops and streaming micro-batches (the eval side is
-    * neither re-counted nor re-collected per call).
-    */
-  def decontaminatePrepared(
-      train: DataFrame,
-      prepared: PreparedEval,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val spark = train.sparkSession
-    import spark.implicits._
-    keepFilterSide(
-      train.select(col(idCol).cast("long"), col(textCol)).as[(Long, String)],
-      prepared.side, prepared.gramSize, idCol, textCol)
-  }
-
   private[operators] def keepFilterSide(
       base: org.apache.spark.sql.Dataset[(Long, String)],
       side: Either[Broadcast[Set[String]], (DataFrame, Broadcast[BloomFilter])],

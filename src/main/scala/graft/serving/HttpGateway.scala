@@ -9,7 +9,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import graft.model.{EntityRef, EntityRegistry, Event, EventType, Payload}
 import graft.model.Types.Args
-import graft.runtime.{AsyncEventTransport, Client, StateflowFuture}
+import graft.runtime.{Client, EventTransport, StateflowFuture}
 import graft.streaming.EventJson
 
 /** HTTP serving layer over an entity runtime — the reference's FastAPI
@@ -47,22 +47,23 @@ import graft.streaming.EventJson
   * event, cheap) and COMPLETE (a reply event arrives). A request whose
   * reply is not already available parks its `HttpExchange` on the
   * [[StateflowFuture]] and FREES its pool thread; one pump thread
-  * advances the runtime and completes every parked exchange whose reply
+  * drains the runtime and completes every parked exchange whose reply
   * landed, dispatching response serialization back to the pool. Over
   * the streaming runtime this means concurrent multi-hop flows SHARE
   * micro-batches — N in-flight T-style calls cost ~H batches, not N*H —
   * because everything fired between drains rides the next drain
   * together; no request ever holds a lock across a batch cycle.
   *
-  * The gateway takes no lock: an [[AsyncEventTransport]] accepts
-  * concurrent callers. The streaming runtime is fired and pumped
-  * lock-free; LocalRuntime's async facade computes the reply at fire
-  * time under its own lock, so its fast path responds inline and the
-  * pump never runs for it.
+  * The gateway takes no lock: an [[EventTransport]] accepts concurrent
+  * callers. The streaming runtime is fired and drained lock-free;
+  * LocalRuntime computes the reply at fire time under its own lock, so
+  * its fast path responds inline and the pump never runs for it. The
+  * pump does not wait on one future as [[StateflowFuture.get]] does:
+  * each drain serves every parked exchange at once.
   */
 final class HttpGateway(
     registry: EntityRegistry,
-    transport: AsyncEventTransport,
+    transport: EventTransport,
     port: Int = 0,
     parkTimeoutMs: Long = 60000L) {
 
@@ -96,17 +97,17 @@ final class HttpGateway(
   private val pumpSignal = new Object
   @volatile private var running = true
   // observability for the concurrency spec: how many parked exchanges
-  // each advance() completed — >1 proves flows shared the batch cycle
-  private val completedPerAdvance = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
-  def advanceCompletions: Seq[Int] =
-    completedPerAdvance.toArray(new Array[Integer](0)).map(_.intValue()).toSeq
+  // each drain() completed — >1 proves flows shared the batch cycle
+  private val completedPerDrain = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+  def drainCompletions: Seq[Int] =
+    completedPerDrain.toArray(new Array[Integer](0)).map(_.intValue()).toSeq
 
   private val pump = new Thread(() => {
     while (running) {
       if (parked.isEmpty)
         pumpSignal.synchronized { if (parked.isEmpty && running) pumpSignal.wait(100) }
       else {
-        try transport.advance()
+        try transport.drain()
         catch { case _: InterruptedException => () case _: Exception => () }
         var n = parked.size()
         var completed = 0
@@ -127,7 +128,7 @@ final class HttpGateway(
           }
           n -= 1
         }
-        if (completed > 0) completedPerAdvance.add(completed): Unit
+        if (completed > 0) completedPerDrain.add(completed): Unit
       }
     }
   }, "graft-gateway-pump")

@@ -92,8 +92,4 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
-
-  /** Register all tables as temp views (for spark.sql-style use / tests). */
-  def registerViews(spark: SparkSession, sfDir: String): Unit =
-    all.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

@@ -124,7 +124,7 @@ object EventBinary {
 
   private def writeEvent(o: DataOutputStream, ev: Event): Unit = {
     str(o, ev.eventId); str(o, ev.entity); str(o, ev.key)
-    o.writeByte(EventJson.AllTypes.indexOf(ev.eventType))
+    o.writeByte(EventType.All.indexOf(ev.eventType))
     ev.payload match {
       case Payload.CreateArgs(args) => o.writeByte(0); writeMap(o, args, 1)
       case Payload.AttrGet(attr) => o.writeByte(1); str(o, attr)
@@ -139,7 +139,7 @@ object EventBinary {
   }
 
   private def readEvent(in: In): Event =
-    Event(in.str(), in.str(), in.str(), EventJson.AllTypes.lift(in.byte()).getOrElse(in.fail("unknown event type")),
+    Event(in.str(), in.str(), in.str(), EventType.All.lift(in.byte()).getOrElse(in.fail("unknown event type")),
       in.byte() match {
         case 0 => Payload.CreateArgs(readMap(in, 1))
         case 1 => Payload.AttrGet(in.str())

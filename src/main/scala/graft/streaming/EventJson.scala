@@ -34,14 +34,8 @@ object EventJson {
   private val f = JsonNodeFactory.instance
   private val mapper = new ObjectMapper()
 
-  import EventType._
-  private[streaming] val AllTypes: Seq[EventType] = Seq(
-    InitClass, FindClass, GetState, SetState, UpdateState, DeleteState,
-    InvokeStateful, InvokeStateless, EventFlow, Ping,
-    SuccessfulCreateClass, SuccessfulInvocation, SuccessfulStateRequest,
-    FoundClass, KeyNotFound, FailedInvocation, Pong)
   private val typeByName: Map[String, EventType] =
-    AllTypes.map(t => t.toString -> t).toMap
+    EventType.All.map(t => t.toString -> t).toMap
 
   // ------------------------------------------------------------- values
 

@@ -107,7 +107,7 @@ final class StreamingEntityRuntime(
     checkpointDir: Option[String] = None,
     fileInputDir: Option[String] = None,
     maxDrainRounds: Int = 64)
-    extends graft.runtime.AsyncEventTransport with AutoCloseable {
+    extends graft.runtime.EventTransport with AutoCloseable {
   import StreamingEntityRuntime._
   import spark.implicits._
   require(maxDrainRounds >= 1, s"maxDrainRounds must be >= 1, got $maxDrainRounds")
@@ -382,34 +382,18 @@ final class StreamingEntityRuntime(
       enqueueLock.synchronized(input.addData(rows)): Unit
   }
 
-  /** Synchronous request/reply: feed the event, run micro-batches until
-    * its reply lands.
-    */
-  override def send(ev: Event): Event = {
-    enqueue(Seq(ev))
-    var spins = 0
-    while (!replies.containsKey(ev.eventId) && spins < 300) {
-      query.processAllAvailable()
-      spins += 1
-    }
-    val r = replies.remove(ev.eventId)
-    require(r != null, s"no reply for ${ev.eventId} after $spins batches")
-    r
-  }
+  // sendAsync, drain and takeReply are safe from any thread: the ingress
+  // takes its own lock (see enqueue), processAllAvailable is a blocking
+  // probe, batch bodies run on the stream thread, and the reply table is
+  // a ConcurrentHashMap
 
   /** Pipelined fire-and-forget send; replies land in the reply table. */
-  def sendAsync(evs: Seq[Event]): Unit = enqueue(evs)
-
-  override def sendNoWait(ev: Event): Unit = enqueue(Seq(ev))
-  // safe from any thread: the ingress takes its own lock (see enqueue),
-  // the reply table is a ConcurrentHashMap, processAllAvailable is a
-  // blocking probe, and batch bodies run on the stream thread
-  override def advance(): Unit = drain()
+  override def sendAsync(evs: Seq[Event]): Unit = enqueue(evs)
 
   /** Run micro-batches until all queued input, spills included, is done. */
-  def drain(): Unit = query.processAllAvailable()
+  override def drain(): Unit = query.processAllAvailable()
 
-  def takeReply(eventId: String): Option[Event] = Option(replies.remove(eventId))
+  override def takeReply(eventId: String): Option[Event] = Option(replies.remove(eventId))
 
   /** Finish the queued input, then stop the query and free the store. */
   override def close(): Unit = {

@@ -204,4 +204,32 @@ class LocalEntitySpec extends EntityScenarios {
     assert(c.call(b, "balance_equal_to", Map("equal_balance" -> 7)) === true)
     assert(rt.store(("ExperimentalB", "b")) eq before) // same instance: no write
   }
+
+  test("concurrent send and sync Client calls on one entity lose no update") {
+    val rt = new LocalRuntime(TestEntities.registry)
+    val c = new Client(TestEntities.registry, rt)
+    val Right(u) = c.create("User", Map("username" -> "shared"))
+    val (threads, perThread) = (8, 500)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      val done = (0 until threads).map { t =>
+        pool.submit(new Runnable {
+          override def run(): Unit = {
+            start.await()
+            (0 until perThread).foreach { i =>
+              // half the threads send the request event themselves, half
+              // share the sync Client
+              if (t % 2 == 0) rt.send(Event(s"t$t-$i", "User", u.key, EventType.InvokeStateful,
+                Payload.MethodCall("update_balance", Map("x" -> 1))))
+              else c.call(u, "update_balance", Map("x" -> 1))
+            }
+          }
+        })
+      }
+      start.countDown()
+      done.foreach(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdown()
+    assert(c.getAttr(u, "balance") === threads * perThread)
+  }
 }

@@ -54,19 +54,11 @@ class EventJsonSpec extends AnyFunSuite {
     Gen.alphaNumStr.map(Payload.ErrorMsg),
     Gen.const(Payload.Empty))
 
-  private val allTypes: Seq[EventType] = {
-    import EventType._
-    Seq(InitClass, FindClass, GetState, SetState, UpdateState, DeleteState,
-      InvokeStateful, InvokeStateless, EventFlow, Ping,
-      SuccessfulCreateClass, SuccessfulInvocation, SuccessfulStateRequest,
-      FoundClass, KeyNotFound, FailedInvocation, Pong)
-  }
-
   private val genEvent: Gen[Event] = for {
     id <- Gen.identifier
     entity <- Gen.identifier
     key <- Gen.oneOf(Gen.const(""), Gen.identifier) // empty = pre-key InitClass leg
-    et <- Gen.oneOf(allTypes)
+    et <- Gen.oneOf(EventType.All)
     p <- genPayload
   } yield Event(id, entity, key, et, p)
 
@@ -82,7 +74,7 @@ class EventJsonSpec extends AnyFunSuite {
   }
 
   test("every event type survives the wire by name") {
-    allTypes.foreach { et =>
+    EventType.All.foreach { et =>
       val ev = Event("e1", "User", "k", et, Payload.Empty)
       assert(EventJson.decode(EventJson.encode(ev)).eventType === et)
     }

@@ -95,13 +95,6 @@ class HttpGatewaySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 }
 
-/** The same gateway over the Structured Streaming runtime — HTTP request
-  * -> MemoryStream ingress -> in-batch drain rounds -> reply future ->
-  * HTTP response, the reference's full serving stack shape
-  * (fastapi -> kafka -> flink in stateflow terms) in one process.
-  * `StreamingEntityRuntime` IS an [[graft.runtime.EventTransport]], so
-  * the gateway composes with zero adapter code.
-  */
 /** The threaded-executor gate: many HTTP clients in flight at once,
   * each response correct, every runtime mutation serialized (no lost
   * increments on a shared entity) — the concurrency contract the
@@ -161,15 +154,13 @@ class HttpGatewayConcurrencySpec extends AnyFunSuite {
   * gateway stopped with exchanges still parked answers them 503.
   */
 class HttpGatewayParkTimeoutSpec extends AnyFunSuite {
-  import graft.model.{Event, EventType, Payload}
+  import graft.model.Event
 
   /** Concurrent-safe transport that swallows every request. */
-  private final class BlackHole extends graft.runtime.AsyncEventTransport {
-    override def sendNoWait(ev: Event): Unit = ()
-    override def advance(): Unit = ()
+  private final class BlackHole extends graft.runtime.EventTransport {
+    override def sendAsync(evs: Seq[Event]): Unit = ()
+    override def drain(): Unit = ()
     override def takeReply(eventId: String): Option[Event] = None
-    override def send(ev: Event): Event =
-      Event(ev.eventId, "", "", EventType.Pong, Payload.Empty)
   }
 
   test("lost reply -> 504 at the park deadline; no leaked exchange") {
@@ -255,9 +246,9 @@ class HttpGatewayTMixStreamingSpec extends SparkSpec {
       // flows rode the same batches
       assert(batchesUsed < n,
         s"$n two-hop flows used $batchesUsed busy batches — no sharing")
-      // at least one pump advance completed several parked exchanges
-      assert(gw.advanceCompletions.exists(_ > 1),
-        s"advance completions ${gw.advanceCompletions} — exchanges never shared a drain")
+      // at least one pump drain completed several parked exchanges
+      assert(gw.drainCompletions.exists(_ > 1),
+        s"drain completions ${gw.drainCompletions} — exchanges never shared a drain")
       // no lost updates: every account sent 5 and received 5
       (0 until n).foreach { i =>
         assert(get(s"/YCSBEntity/t$i/attr/value").body() === """{"value":100}""")
@@ -269,6 +260,13 @@ class HttpGatewayTMixStreamingSpec extends SparkSpec {
   }
 }
 
+/** The same gateway over the Structured Streaming runtime — HTTP request
+  * -> MemoryStream ingress -> in-batch drain rounds -> reply future ->
+  * HTTP response, the reference's full serving stack shape
+  * (fastapi -> kafka -> flink in stateflow terms) in one process.
+  * `StreamingEntityRuntime` IS an [[graft.runtime.EventTransport]], so
+  * the gateway composes with zero adapter code.
+  */
 class HttpGatewayStreamingSpec extends SparkSpec {
 
   test("HTTP lifecycle end-to-end over the streaming runtime") {

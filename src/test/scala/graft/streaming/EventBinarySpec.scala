@@ -5,7 +5,7 @@ import org.scalacheck.Gen
 import graft.model._
 import graft.model.Types._
 import graft.flow.FlowState
-import StreamingEntityRuntime.{DrainOut, Work}
+import StreamingEntityRuntime.{DrainOut, Key, Work}
 import EventBinary.CodecException
 
 /** The runtime codec's two contracts. Round trip: every value of the
@@ -61,7 +61,7 @@ class EventBinarySpec extends AnyFunSuite {
     id <- Gen.identifier
     entity <- Gen.identifier
     key <- Gen.oneOf(Gen.const(""), Gen.identifier)
-    et <- Gen.oneOf(EventJson.AllTypes)
+    et <- Gen.oneOf(EventType.All)
     p <- genPayload
   } yield Event(id, entity, key, et, p)
 
@@ -106,6 +106,59 @@ class EventBinarySpec extends AnyFunSuite {
     val outs = work.zip(entries).map { case (w, (_, st)) => DrainOut(w.key, w.events, st, changed = st.isEmpty) }
     assert(EventBinary.results.decode(EventBinary.results.encode(outs)) === outs)
     assert(EventBinary.changelog.decode(EventBinary.changelog.encode(Nil)) === Nil)
+  }
+
+  test("golden bytes: one event per payload variant and a changelog file") {
+    // Stored ingress lines and changelogs have no migration, and a codec
+    // whose tags moved still round-trips, so the bytes are pinned here.
+    // A change below is a format change: append tags, never renumber.
+    def hex(b: Array[Byte]) = b.map(x => f"$x%02x").mkString
+    // id "e", entity "User", key "u1"; then the type tag, the payload tag
+    // and the payload
+    val head = "00000001" + "65" + "00000004" + "55736572" + "00000002" + "7531"
+    val golden: Seq[(Event, String)] = Seq(
+      (Event("e", "User", "u1", EventType.InitClass, Payload.CreateArgs(Map("username" -> "u1"))),
+        head + "00000000000100000008757365726e616d6509000000027531"),
+      (Event("e", "User", "u1", EventType.GetState, Payload.AttrGet("balance")),
+        head + "02010000000762616c616e6365"),
+      (Event("e", "User", "u1", EventType.UpdateState, Payload.AttrSet("balance", 5L)),
+        head + "04020000000762616c616e6365060000000000000005"),
+      (Event("e", "User", "u1", EventType.SetState, Payload.StateSet(Map("balance" -> 7))),
+        head + "0303000000010000000762616c616e63650500000007"),
+      (Event("e", "User", "u1", EventType.InvokeStateful,
+        Payload.MethodCall("update_balance", Map("x" -> 1.toShort))),
+        head + "06040000000e7570646174655f62616c616e6365000000010000000178040001"),
+      (Event("e", "User", "u1", EventType.EventFlow,
+        Payload.FlowPayload(FlowState("User.buy_item", 2, Map("item" -> EntityRef("Item", "i1")),
+          EntityRef("User", "u1")))),
+        head + "08050000000d557365722e6275795f6974656d00000002000000010000000469" +
+          "74656d0a000000044974656d0000000269310000000455736572000000027531"),
+      (Event("e", "User", "u1", EventType.SuccessfulInvocation, Payload.Result(
+        Vector(null, true, false, 1.toByte, 1.5f, 2.5, "s", Map("m" -> Vector())))),
+        head + "0b060d000000080002010301073fc00000084004000000000000090000000173" +
+          "0c00000001000000016d0d00000000"),
+      (Event("e", "User", "u1", EventType.FailedInvocation, Payload.ErrorMsg("no")),
+        head + "0f07000000026e6f"),
+      (Event("e", "", "", EventType.Pong, Payload.Empty), "000000016500000000000000001008"))
+    golden.foreach { case (ev, bytes) =>
+      assert(hex(EventBinary.event.encode(ev)) === bytes, s"encoding of $ev")
+    }
+    val file: Seq[(Key, Option[State])] = Seq(
+      ("User", "u1") -> Some(Map("balance" -> 5, "items" -> Vector(EntityRef("Item", "i1")))),
+      ("Item", "i2") -> None)
+    // format byte, entry count, then per entry its key and state flag
+    assert(hex(EventBinary.changelog.encode(file)) ===
+      "01" + "00000002" +
+        "00000004557365720000000275310100000002" +
+        "0000000762616c616e63650500000005" +
+        "000000056974656d730d000000010a000000044974656d000000026931" +
+        "000000044974656d00000002693200")
+    // the tags no event above reaches: a type's tag is its position here
+    assert(EventType.All.map(_.toString) === Seq(
+      "InitClass", "FindClass", "GetState", "SetState", "UpdateState", "DeleteState",
+      "InvokeStateful", "InvokeStateless", "EventFlow", "Ping",
+      "SuccessfulCreateClass", "SuccessfulInvocation", "SuccessfulStateRequest",
+      "FoundClass", "KeyNotFound", "FailedInvocation", "Pong"))
   }
 
   test("a value outside the set fails at encode time, naming its class") {
